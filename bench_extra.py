@@ -1,14 +1,12 @@
 #!/usr/bin/env python
-"""Round-6 optimization harness (guide §1): per-query noop-sink timing,
-stage isolation for the heavy dedup queries, and .explain("formatted")
-capture into plans/r06/.
+"""Round-6 optimization harness (guide §1): per-query noop-sink timing
+and .explain("formatted") capture into plans/r06/.
 
 bench.py is FROZEN for driver measurement; this file holds the extra
 instrumentation the optimization round needs. Usage:
 
   python bench_extra.py time  [query ...]     # noop-sink per-query seconds
   python bench_extra.py plans [query ...]     # write plans/r06/<q>_<tag>.txt
-  python bench_extra.py stages                # minhash/ngram stage split
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0 here — the scale
 the driver measured round 5 at), SPARK_GRAFT_CPUS (default 32),
@@ -104,68 +102,7 @@ def cmd_plans(names):
         print(f"wrote {path}", file=sys.stderr)
 
 
-def cmd_stages(_names):
-    """Split the two heavy dedup queries into timed sub-stages to see
-    where the seconds go (kernel vs join vs verify)."""
-    from onnxocr_ray_spark.operators import dedup
-    from onnxocr_ray_spark.caching import release_persisted, scoped_persist
-    from pyspark.sql import functions as F
-
-    spark = _spark()
-    out = {}
-
-    def stage(label, fn, reps=REPS):
-        best = None
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            fn()
-            dt = time.perf_counter() - t0
-            best = dt if best is None or dt < best else best
-        out[label] = round(best, 3)
-        print(f"{label}: {out[label]}", file=sys.stderr)
-
-    # --- minhash stages ---
-    stage("minhash.signed_only",
-          lambda: materialize(dedup._signed(spark, SF_DIR)))
-
-    def cands_only():
-        release_persisted()
-        sh = scoped_persist(dedup._signed(spark, SF_DIR))
-        exploded = sh.select(
-            "doc_id", F.posexplode("bands").alias("band_idx", "band_hash")
-        )
-        cands = (
-            exploded.alias("a")
-            .join(
-                exploded.alias("b"),
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("a.doc_id").alias("id_a"),
-                    F.col("b.doc_id").alias("id_b"))
-            .distinct()
-        )
-        materialize(cands)
-        spark.catalog.clearCache()
-
-    stage("minhash.persist+cands", cands_only)
-    stage("minhash.full",
-          lambda: (release_persisted(),
-                   materialize(dedup.dedup_minhash_lsh(spark, SF_DIR)),
-                   spark.catalog.clearCache()))
-
-    # --- ngram stages ---
-    stage("ngram.shingled_only",
-          lambda: materialize(dedup._shingled(spark, SF_DIR)))
-    stage("ngram.full",
-          lambda: (release_persisted(),
-                   materialize(dedup.dedup_ngram_jaccard(spark, SF_DIR)),
-                   spark.catalog.clearCache()))
-    print(json.dumps({"sf_dir": SF_DIR, "cpus": CPUS, "stages": out}))
-
-
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "time"
     names = sys.argv[2:]
-    {"time": cmd_time, "plans": cmd_plans, "stages": cmd_stages}[cmd](names)
+    {"time": cmd_time, "plans": cmd_plans}[cmd](names)

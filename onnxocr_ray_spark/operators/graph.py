@@ -1,11 +1,15 @@
-"""Iterative graph + sketch operators.
+"""Graph + sketch operators.
 
 - ``dedup_cc_canonical``: CONNECTED-COMPONENTS canonical assignment over
-  the LSH near-dup edge set — the full transitive closure, upgrading
-  ``dedup_near_canonical``'s 1-hop min. Spark side is iterative min-label
-  propagation (each round one join + one groupBy, converges in
-  O(diameter) rounds — the standard large-scale CC shape); the oracle is
-  a recursive CTE computing the same closure.
+  the LSH near-dup edge set, with ``dedup_near_canonical``
+  (relational2.py) its 1-hop twin. Two docs are linked exactly when
+  their ``bands[0]`` match, and ``bands[0]`` is md5 of the two
+  fixed-width hex signatures, so a link is equality of ``(sig0, sig1)``.
+  Equality is transitive: the graph is a disjoint union of cliques, and
+  both a node's 1-hop min and its component min are the min over its
+  ``bands[0]`` equivalence class — one window, no join, no iteration.
+  The oracle is a recursive CTE computing the full closure; it equals
+  the window because band equality is transitive.
 - ``sketch_kmv_distinct``: K-minimum-values distinct-count sketch —
   a DETERMINISTIC sketch (md5 order statistics), so unlike HLL it is
   bit-reproducible across engines and the oracle can check it exactly.
@@ -13,38 +17,21 @@
 
 from __future__ import annotations
 
-import warnings
-from typing import Tuple
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from onnxocr_ray_spark.caching import scoped_persist
 from onnxocr_ray_spark.functions import portable_md5
 from onnxocr_ray_spark.registry import register
 from onnxocr_ray_spark.sources.tables import load_table
 
-# max propagation rounds: components here are tiny (near-dup clusters);
-# the loop exits early on convergence, this only bounds a pathology
-_CC_MAX_ITERS = 10
 
-
-def _lsh_edges(spark: SparkSession, sf_dir: str) -> Tuple[DataFrame, DataFrame]:
-    """Near-dup graph inputs: returns ``(nodes, pairs)`` — the node set
-    ``(doc_id)`` and the undirected candidate edges ``(id_a, id_b)`` from
-    a strict 2-signature MinHash match (same candidate rule as
-    dedup_near_canonical, relational2.py)."""
-    from onnxocr_ray_spark.operators.dedup import _signed
-
-    sigs = scoped_persist(
-        _signed(spark, sf_dir).select("doc_id", F.col("bands")[0].alias("b0"))
+def _band_class_min(keyed: DataFrame) -> DataFrame:
+    """``(doc_id, b0)`` -> ``(doc_id, canonical_id)``: the min doc_id of
+    the node's ``b0`` equivalence class (one shuffle on ``b0``)."""
+    return keyed.select(
+        "doc_id",
+        F.min("doc_id").over(Window.partitionBy("b0")).alias("canonical_id"),
     )
-    a = sigs.select(F.col("doc_id").alias("id_a"), F.col("b0").alias("ba"))
-    b = sigs.select(F.col("doc_id").alias("id_b"), F.col("b0").alias("bb"))
-    pairs = a.join(
-        b, (F.col("ba") == F.col("bb")) & (F.col("id_a") < F.col("id_b"))
-    ).select("id_a", "id_b")
-    return sigs.select("doc_id"), pairs
 
 
 _EDGE_SQL = """
@@ -88,69 +75,17 @@ _EDGE_SQL = """
     """,
     doc=(
         "training-data op: connected-components canonical assignment over "
-        "LSH near-dup edges — iterative min-label propagation (full "
-        "transitive closure, not 1-hop); oracle = recursive CTE"
+        "LSH near-dup edges — min doc_id over the bands[0] equivalence "
+        "class; equals the recursive-CTE closure because band equality is "
+        "transitive; oracle = recursive CTE"
     ),
 )
 def dedup_cc_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nodes, pairs = _lsh_edges(spark, sf_dir)
-    return min_label_propagate(nodes, pairs)
+    from onnxocr_ray_spark.operators.dedup import _signed
 
-
-def min_label_propagate(nodes: DataFrame, pairs: DataFrame,
-                        max_iters: int = _CC_MAX_ITERS) -> DataFrame:
-    """Connected components by iterative min-label propagation.
-
-    ``nodes(doc_id)``, ``pairs(id_a, id_b)`` -> ``(doc_id, canonical_id)``
-    where canonical_id = min doc_id in the node's component. Each round is
-    one equi-join + one groupBy (both shuffle on doc_id); convergence is
-    O(component diameter) rounds with an early exit, the standard
-    large-scale CC shape when a full GraphX/star-contraction dependency
-    is not warranted (near-dup clusters are small and shallow)."""
-    edges = scoped_persist(
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).unionByName(
-            pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v"))
-        )
+    return _band_class_min(
+        _signed(spark, sf_dir).select("doc_id", F.col("bands")[0].alias("b0"))
     )
-    labels = scoped_persist(
-        nodes.select("doc_id", F.col("doc_id").alias("canonical_id"))
-    )
-    changed = 0
-    for _ in range(max_iters):
-        # each node takes min(own label, neighbors' labels)
-        neighbor_min = (
-            edges.join(labels, edges.v == labels.doc_id)
-            .groupBy(F.col("u").alias("doc_id"))
-            .agg(F.min("canonical_id").alias("nmin"))
-        )
-        new = F.least(
-            F.col("canonical_id"),
-            F.coalesce(F.col("nmin"), F.col("canonical_id")),
-        )
-        # carry a per-row change flag out of the SAME propagation join, so
-        # the convergence probe is one sum() over the persisted result —
-        # no extra new-vs-old join per round
-        new_labels = scoped_persist(
-            labels.join(neighbor_min, "doc_id", "left").select(
-                "doc_id",
-                new.alias("canonical_id"),
-                (new != F.col("canonical_id")).cast("long").alias("chg"),
-            )
-        )
-        changed = new_labels.agg(F.sum("chg")).first()[0] or 0
-        labels = new_labels.select("doc_id", "canonical_id")
-        if changed == 0:
-            break
-    if changed != 0:
-        warnings.warn(
-            f"min_label_propagate: labels still changing after {max_iters} "
-            f"rounds ({changed} rows); a component's diameter exceeds the "
-            "round budget — returning PARTIAL labels. Raise max_iters for "
-            "deep graphs (near-dup clusters converge in <=3 rounds).",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels
 
 
 @register(

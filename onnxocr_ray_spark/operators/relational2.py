@@ -190,35 +190,17 @@ def median_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sigs s LEFT JOIN edges e ON e.doc_id = s.doc_id
     GROUP BY s.doc_id
     """,
-    doc="training-data op: near-dup canonical assignment (min doc_id over strict 2-signature match neighborhood) — the keep/drop decision layer on top of LSH",
+    doc=(
+        "training-data op: near-dup canonical assignment — min doc_id over "
+        "the bands[0] equivalence class (strict 2-signature match); equals "
+        "the oracle's 1-hop min and the recursive-CTE closure because band "
+        "equality is transitive — the keep/drop decision layer on top of LSH"
+    ),
 )
 def dedup_near_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from onnxocr_ray_spark.operators.dedup import _signed
+    from onnxocr_ray_spark.operators.graph import _band_class_min
 
-    # strict match on the first two MinHash signatures (bands[0] is
-    # md5(sig0+sig1), so equality of bands[0] == equality of (sig0, sig1))
-    from onnxocr_ray_spark.caching import scoped_persist
-
-    sigs = scoped_persist(
+    return _band_class_min(
         _signed(spark, sf_dir).select("doc_id", F.col("bands")[0].alias("b0"))
-    )
-    a = sigs.select(F.col("doc_id").alias("id_a"), F.col("b0").alias("ba"))
-    b = sigs.select(F.col("doc_id").alias("id_b"), F.col("b0").alias("bb"))
-    pairs = a.join(
-        b, (F.col("ba") == F.col("bb")) & (F.col("id_a") < F.col("id_b"))
-    ).select("id_a", "id_b")
-    edges = pairs.select(
-        F.col("id_a").alias("doc_id"), F.col("id_b").alias("other")
-    ).unionByName(
-        pairs.select(F.col("id_b").alias("doc_id"), F.col("id_a").alias("other"))
-    )
-    return (
-        sigs.select("doc_id")
-        .join(edges, "doc_id", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.least(
-                F.col("doc_id"), F.coalesce(F.min("other"), F.col("doc_id"))
-            ).alias("canonical_id")
-        )
     )

@@ -12,8 +12,8 @@ from onnxocr_ray_spark.registry import load_all
 
 from tests.conftest import SF001
 
-# a persist-heavy slice of the registry: LSH signatures, routed extract,
-# simhash bands, CC propagation labels, ngram shingle table
+# the dedup + extract slice of the registry: LSH signatures, routed
+# extract, simhash bands, CC canonical window, ngram shingle table
 NAMES = [
     "dedup_minhash_lsh",
     "dedup_simhash_pairs",
@@ -38,8 +38,8 @@ def test_sequential_queries_keep_cache_bounded(spark):
         df.write.mode("overwrite").format("noop").save()
         high_water = max(high_water, _n_cached(spark))
     # at any boundary only the CURRENT query's scoped caches may be live;
-    # the most persist-hungry query holds 4 handles (CC: edges + labels +
-    # per-round new_labels), so a leak across 8 runs would blow past this
+    # no query in this slice holds more than a couple of handles, so a
+    # leak across 8 runs would blow past this
     assert high_water <= 6, high_water
     # after one more release cycle (any registry fn triggers it), the
     # previous query's caches are gone

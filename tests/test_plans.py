@@ -186,6 +186,15 @@ def test_asof_has_no_join(spark, queries):
     assert "Window" in plan
 
 
+def test_near_dup_canonical_has_no_join(spark, queries):
+    # bands[0] equality is transitive, so both canonical queries are one
+    # min window over the band key: no self-join, one shuffle on b0
+    for name in ("dedup_near_canonical", "dedup_cc_canonical"):
+        plan = plan_of(queries[name].fn(spark, SF0001))
+        assert "Join" not in plan, plan
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
 def test_embed_cosine_joins_on_lsh_bucket(spark, queries):
     # candidates must come from the sign-LSH (bucket, label) blocking,
     # not an all-pairs product within label blocks. r6: the pairwise
