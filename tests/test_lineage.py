@@ -1,12 +1,16 @@
 """Lineage + idempotent resume (north-rule checkpoint requirement)."""
 
+import glob
+import hashlib
+import os
 import shutil
 import tempfile
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from onnxocr_ray_spark.plans.lineage import read_lineage, run_extraction
+from onnxocr_ray_spark.plans.lineage import align_to_buckets, read_lineage, run_extraction
 from onnxocr_ray_spark.sources.pages import pages_table
 
 from tests.conftest import SF0001
@@ -66,13 +70,20 @@ def test_interrupted_run_resumes_only_missing_buckets(spark, outdir):
         shutil.rmtree(clean_dir, ignore_errors=True)
 
 
+def _files(d, pattern="*.parquet"):
+    return glob.glob(os.path.join(d, "**", pattern), recursive=True)
+
+
 def test_rerun_is_noop(spark, outdir):
     pages = pages_table(spark, SF0001)
     run_extraction(spark, pages, outdir, n_buckets=8, snapshot_id="snapA")
+    lineage_files = sorted(os.listdir(f"{outdir}/lineage"))
     again = run_extraction(spark, pages, outdir, n_buckets=8, snapshot_id="snapA")
     assert again.processed_buckets == 0
     assert again.skipped_buckets == 8
     assert read_lineage(spark, outdir).count() == 8
+    # a no-op rerun appends nothing, not even an empty file
+    assert sorted(os.listdir(f"{outdir}/lineage")) == lineage_files
 
 
 def test_new_snapshot_reprocesses(spark, outdir):
@@ -131,3 +142,86 @@ def test_cli_main_runs_and_resumes(spark, outdir, capsys):
     second = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert second["processed_buckets"] == 0
     assert second["skipped_buckets"] == 16
+
+
+def test_run_leaves_session_conf_unchanged(spark, outdir):
+    """Dynamic partition overwrite is a writer option, and the read-back's
+    listing threshold is restored: a later partitioned overwrite in the
+    caller's session keeps its own semantics. 64 buckets exceed the
+    default listing threshold of 32, so the restore path runs."""
+    spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    before = spark.conf.getAll
+    run = run_extraction(spark, pages_table(spark, SF0001), outdir, n_buckets=64)
+    assert run.processed_buckets == 64
+    assert spark.conf.getAll == before
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() == "static"
+
+
+def test_corrupt_lineage_raises(spark, outdir):
+    """A lineage file that cannot be read must fail the run, not read as
+    "nothing committed" and silently reprocess and re-append everything."""
+    pages = pages_table(spark, SF0001)
+    run_extraction(spark, pages, outdir, n_buckets=8, snapshot_id="snapA")
+    (part,) = _files(f"{outdir}/lineage")
+    with open(part, "wb") as fh:
+        fh.write(b"not a parquet file" * 64)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        run_extraction(spark, pages, outdir, n_buckets=8, snapshot_id="snapA")
+    assert _files(f"{outdir}/lineage") == [part]
+
+
+def test_empty_lineage_dir_means_nothing_committed(spark, outdir):
+    os.makedirs(f"{outdir}/lineage/_temporary/0")
+    pages = pages_table(spark, SF0001)
+    run = run_extraction(spark, pages, outdir, n_buckets=8, snapshot_id="snapA")
+    assert run.processed_buckets == 8
+    assert run.skipped_buckets == 0
+    assert run.n_docs == pages.count()
+
+
+def test_lineage_matches_independent_recomputation(spark, outdir):
+    """Each lineage row equals n_docs and sha256 over the sorted url
+    checksums, recomputed from the committed files without Spark; the
+    write makes at most one file per (task, bucket) boundary."""
+    n_buckets = 16
+    run = run_extraction(spark, pages_table(spark, SF0001), outdir, n_buckets=n_buckets)
+    data = pq.read_table(f"{outdir}/data", columns=["checksum", "wp"]).to_pydict()
+    by_wp = {}
+    for c, wp in zip(data["checksum"], data["wp"]):
+        by_wp.setdefault(int(wp), []).append(c)
+    want = {
+        wp: (len(cs), hashlib.sha256("\n".join(sorted(cs)).encode()).hexdigest())
+        for wp, cs in by_wp.items()
+    }
+    got = {
+        r["wp"]: (r["n_docs"], r["bucket_checksum"])
+        for r in pq.read_table(f"{outdir}/lineage").to_pylist()
+    }
+    assert got == want
+    assert len(got) == n_buckets == run.processed_buckets
+    assert len({c for _, c in got.values()}) == n_buckets
+    assert len({n for n, _ in got.values()}) > 1
+    assert sum(n for n, _ in got.values()) == run.n_docs
+    n_files = len(_files(f"{outdir}/data"))
+    assert n_files <= n_buckets + spark.sparkContext.defaultParallelism - 1
+
+
+def test_alignment_leaves_no_partition_empty(spark):
+    """More partitions than buckets: range alignment on (wp, url) still
+    fills every partition, where hash-by-wp leaves at least P - n_buckets
+    of them empty."""
+    n_buckets, parts = 8, 16
+    bucketed = pages_table(spark, SF0001).select(
+        "url", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int").alias("wp")
+    )
+
+    def sizes(df):
+        counts = dict(
+            df.groupBy(F.spark_partition_id().alias("p")).count().collect()
+        )
+        return [counts.get(p, 0) for p in range(parts)]
+
+    aligned = sizes(align_to_buckets(bucketed, parts))
+    assert min(aligned) > 0
+    assert max(aligned) <= 2 * sum(aligned) / parts
+    assert sizes(bucketed.repartition(parts, "wp")).count(0) >= parts - n_buckets
