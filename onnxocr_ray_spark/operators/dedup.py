@@ -4,26 +4,32 @@ Five dedup families over ``documents``, each Spark-first with a DuckDB
 oracle:
 
 - exact (hash-groupBy)
-- MinHash + LSH (shingle -> k signatures -> banded buckets -> bucket join
-  -> exact-Jaccard verification)
+- MinHash + LSH (shingle -> k signatures -> banded buckets -> per-bucket
+  pairs -> exact-Jaccard verification)
 - SimHash (token-hash bit-vote signature)
 - n-gram Jaccard with blocking
 - embedding-cosine near-dup (see also similarity.py)
 
-Scale notes: the Spark implementations use explode + equi-join for LSH
-bucketing (shuffle on band hash — the scalable plan at 10^12 docs); the
-oracles use the naive OR-join, which is only feasible at oracle scale.
+Scale notes: the pair queries run the blocked-pair kernel of pairs.py
+(one shuffle on the bucket or block key); the oracles use the naive
+OR-join or self-join, which is only feasible at oracle scale.
 All hashes are md5-over-strings so both engines agree bit-for-bit
 (functions/__init__.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import hashlib
+from typing import Optional
+
+import numpy as np
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from onnxocr_ray_spark.functions import portable_md5, shingles_of, words_of
+from onnxocr_ray_spark.operators.pairs import blocked_pairs, column, grid, set_overlap
 from onnxocr_ray_spark.registry import register
 from onnxocr_ray_spark.sources.tables import load_table, spread_scan
 
@@ -89,25 +95,18 @@ def dedup_exact_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- shared shingle/signature scaffolding ---
 #
 # Two implementations with identical output:
-#   _shingled_exprs  — pure Column expressions (kept as the reference
-#                      semantics; used by unit tests)
-#   _shingled        — Arrow-batched mapInPandas. MEASURED 20-40x faster at
-#                      sf0.1: Catalyst evaluates nested lambda transforms
-#                      (slice/concat/md5 per shingle) interpreted, ~7 ms per
-#                      document; hashlib.md5 over the same strings yields
-#                      bit-identical hex at ~micro-seconds per shingle.
+#   _shingles_expr — pure Column expressions (the JVM reference semantics
+#                    the Python mirrors are tested against)
+#   _shingled      — Arrow-batched mapInPandas. MEASURED 20-40x faster at
+#                    sf0.1: Catalyst evaluates nested lambda transforms
+#                    (slice/concat/md5 per shingle) interpreted, ~7 ms per
+#                    document; hashlib.md5 over the same strings yields
+#                    bit-identical hex at ~micro-seconds per shingle.
 # The DuckDB oracle pins both to the same rows.
 
 
-def _shingled_exprs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    words = words_of(F.lower(F.trim(F.col("text"))))
-    return docs.select(
-        "doc_id",
-        "lang",
-        "n_chars",
-        shingles_of(words, SHINGLE_N).alias("shingles"),
-    ).filter(F.size("shingles") > 0)
+def _shingles_expr(text: Column) -> Column:
+    return shingles_of(words_of(F.lower(F.trim(text))), SHINGLE_N)
 
 
 def _py_shingles(text: str) -> list:
@@ -122,7 +121,6 @@ def _py_shingles(text: str) -> list:
 
 def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
-    from pyspark.sql import types as T
 
     docs = spread_scan(
         load_table(spark, sf_dir, "documents").select(
@@ -188,7 +186,6 @@ def _signed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     import pandas as pd
-    from pyspark.sql import types as T
 
     docs = spread_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -241,6 +238,11 @@ def _signed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(gen, schema=schema)
 
 
+# DuckDB's lower() differs from Spark's (and Python's, which the kernels
+# use) on two inputs: it maps a final capital sigma to σ ('ΟΔΟΣ' ->
+# 'οδοσ', not 'οδος') and drops the combining dot of İ. This oracle and
+# _SIMHASH_SQL are authoritative only on text without those two
+# characters; tests/test_properties.py pins the Python mirrors to Spark.
 _SH_SQL = """
       SELECT doc_id, lang, n_chars,
              [array_to_string((string_split(lower(trim(text, ' ')), ' '))[i:i+1], ' ')
@@ -264,151 +266,27 @@ _BAND_OR_SQL = " OR ".join(f"a.band{b} = b.band{b}" for b in range(LSH_BANDS))
 # --- MinHash + LSH ---
 
 
+def _lsh_bands(tbl):
+    """Min-band codes: each row's doc's band hashes."""
+    bands = column(tbl, "bands").flatten().dictionary_encode().indices.to_numpy()
+    return bands.reshape(-1, LSH_BANDS)
+
+
+_LSH_SCORER = set_overlap("shingles", lambda sa, sb, c: (None, [sa, sb, c]))
+
+
 def _lsh_bucket_pair_counts(ex: DataFrame) -> DataFrame:
-    """Exact shared-shingle counts for every distinct LSH candidate pair,
-    computed per BUCKET ``(band_idx, band_hash)`` in one numpy kernel.
+    """Exact shared-shingle counts (id_a, id_b, sz_a, sz_b, c), id_a <
+    id_b, for every distinct LSH candidate pair: the blocked-pair kernel
+    over BUCKETS ``(band_idx, band_hash)`` with the set-overlap scorer.
+    The min-band rule emits each pair only in the first band where its
+    docs collide — the pair set of a global ``distinct``, with no
+    exchange. The caller rounds the Jaccard in the JVM, as the oracle
+    does."""
+    return blocked_pairs(ex, ["band_idx", "band_hash"],
+                         "id_a long, id_b long, sz_a int, sz_b int, c long", _LSH_SCORER,
+                         min_band=_lsh_bands)
 
-    r6 replacement for the band self-join + global ``distinct`` + two
-    array-attaching verify joins (OPTIMIZATION_r06.md): that plan spent
-    ~100 CPU-seconds at sf1.0 re-hashing both shingle arrays per pair
-    inside ``array_intersect`` (4.4M candidate pairs x ~40-string
-    arrays) after shipping the arrays through two join branches. Here
-    each signed doc row is replicated to its LSH_BANDS buckets (one
-    skinny shuffle, arrays attached once), and each task:
-
-    - dictionary-encodes its partition's shingles and band hashes with
-      ``pd.factorize`` (equality-preserving),
-    - per bucket of m docs builds the m x v 0/1 membership matrix and
-      gets ALL pairwise intersection counts as one BLAS matmul
-      ``A @ A.T`` (float32 is exact for counts < 2^24),
-    - deduplicates pairs ACROSS buckets locally with the min-band rule:
-      a pair is emitted only in the FIRST band where the two docs
-      collide, which is exactly one bucket per candidate pair — the
-      same pair set as the old global ``distinct``, with no exchange.
-
-    Output (id_a, id_b, sz_a, sz_b, c) with id_a < id_b; the caller
-    computes the rounded Jaccard in the JVM so float formatting matches
-    the oracle exactly.
-
-    Scale envelope: per-task memory is O(rows of its buckets) plus the
-    largest bucket's m x v matrix; pair emission per bucket is O(m^2) —
-    the same envelope as the previous join plan's bucket blowup
-    (VERDICT r5 "What's wrong" 3; exact-dedup-first remains the
-    documented mitigation for boilerplate mega-buckets). Partition
-    count follows ``spark.sql.shuffle.partitions``.
-    """
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("sz_a", T.IntegerType()),
-            T.StructField("sz_b", T.IntegerType()),
-            T.StructField("c", T.LongType()),
-        ]
-    )
-    _OUT_BATCH = 1 << 20
-
-    def gen(batches):
-        # mapInArrow for the same reason as the ngram kernel: list- and
-        # string-heavy input flattens zero-copy through arrow offsets,
-        # and the multi-million-row numeric output leaves as large
-        # arrow batches instead of 2048-row pandas slices
-        batches = list(batches)
-        if not batches:
-            return
-        tbl = pa.Table.from_batches(batches).combine_chunks()
-        n = tbl.num_rows
-        if not n:
-            return
-        ids = tbl.column("doc_id").combine_chunks().to_numpy()
-        band_idx = tbl.column("band_idx").combine_chunks().to_numpy()
-        # dictionary-encode hashes/shingles once per partition (C++
-        # equality-preserving codes, which is all the kernel compares)
-        hash_c = (
-            tbl.column("band_hash").combine_chunks()
-            .dictionary_encode().indices.to_numpy()
-        )
-        bands_arr = tbl.column("bands").combine_chunks()
-        bands_flat = (
-            bands_arr.flatten().dictionary_encode().indices.to_numpy()
-            .reshape(n, LSH_BANDS)
-        )
-        sh_arr = tbl.column("shingles").combine_chunks()
-        lens = np.diff(sh_arr.offsets.to_numpy()).astype(np.int64)
-        flat_codes = (
-            sh_arr.flatten().dictionary_encode().indices.to_numpy()
-            .astype(np.int64)
-        )
-        offs = np.r_[0, np.cumsum(lens)]
-        # group rows into buckets via one lexsort (doc_id-ascending
-        # within bucket => id_a < id_b from triangle indices)
-        order = np.lexsort((ids, hash_c, band_idx))
-        bi_s, hc_s, ids_s = band_idx[order], hash_c[order], ids[order]
-        newb = np.r_[True, (bi_s[1:] != bi_s[:-1]) | (hc_s[1:] != hc_s[:-1])]
-        starts = np.flatnonzero(newb)
-        bounds = np.r_[starts, n]
-        out_a, out_b, out_sa, out_sb, out_c = [], [], [], [], []
-        for s0, s1 in zip(bounds[:-1], bounds[1:]):
-            m = s1 - s0
-            if m < 2:
-                continue
-            sel = order[s0:s1]
-            bi = int(bi_s[s0])
-            # min-band dedup: keep pairs whose bands 0..bi-1 all differ
-            if bi > 0:
-                B = bands_flat[sel, :bi]
-            doc_codes = [flat_codes[offs[r]:offs[r + 1]] for r in sel]
-            all_codes = np.concatenate(doc_codes)
-            uniq, inv = np.unique(all_codes, return_inverse=True)
-            A = np.zeros((m, len(uniq)), dtype=np.float32)
-            pos = 0
-            for i, dc in enumerate(doc_codes):
-                A[i, inv[pos:pos + len(dc)]] = 1.0
-                pos += len(dc)
-            G = A @ A.T
-            iu, ju = np.triu_indices(m, 1)
-            if bi > 0:
-                keep = ~(B[iu] == B[ju]).any(axis=1)
-                iu, ju = iu[keep], ju[keep]
-                if not len(iu):
-                    continue
-            out_a.append(ids_s[s0:s1][iu])
-            out_b.append(ids_s[s0:s1][ju])
-            szs = lens[sel]
-            out_sa.append(szs[iu])
-            out_sb.append(szs[ju])
-            out_c.append(G[iu, ju].astype(np.int64))
-        if not out_a:
-            return
-        id_a = np.concatenate(out_a)
-        id_b = np.concatenate(out_b)
-        sz_a = np.concatenate(out_sa).astype(np.int32)
-        sz_b = np.concatenate(out_sb).astype(np.int32)
-        c = np.concatenate(out_c)
-        for lo in range(0, len(id_a), _OUT_BATCH):
-            hi = min(lo + _OUT_BATCH, len(id_a))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(id_a[lo:hi], type=pa.int64()),
-                    pa.array(id_b[lo:hi], type=pa.int64()),
-                    pa.array(sz_a[lo:hi], type=pa.int32()),
-                    pa.array(sz_b[lo:hi], type=pa.int32()),
-                    pa.array(c[lo:hi], type=pa.int64()),
-                ],
-                names=["id_a", "id_b", "sz_a", "sz_b", "c"],
-            )
-
-    # explicit partition count from conf (scale-adaptive, and exempt
-    # from AQE input-size coalescing, which would serialize the
-    # quadratic per-bucket work — same rationale as the ngram tiling)
-    n_parts = int(ex.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return ex.repartition(n_parts, "band_idx", "band_hash").mapInArrow(
-        gen, schema=schema
-    )
 
 @register(
     "dedup_minhash_lsh",
@@ -431,18 +309,13 @@ def _lsh_bucket_pair_counts(ex: DataFrame) -> DataFrame:
     JOIN sh sa ON sa.doc_id = c.id_a
     JOIN sh sb ON sb.doc_id = c.id_b
     """,
-    doc="training-data op: MinHash+LSH near-dup candidates (k=8 sigs, 4 bands) with exact-Jaccard verify; Spark plan = explode bands + equi-join (scales), oracle = OR-join",
+    doc="training-data op: MinHash+LSH near-dup candidates (k=8 sigs, 4 bands) with exact-Jaccard verify; Spark plan = explode bands + per-bucket pair kernel (scales), oracle = OR-join",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r6 plan (guide §2.3/§4.2; evidence in OPTIMIZATION_r06.md): the
-    # signed docs stream straight into one bucket-keyed shuffle (each
-    # row replicated to its LSH_BANDS buckets with the shingle array
-    # attached ONCE), and the per-bucket numpy kernel produces the
-    # distinct candidate pairs with exact intersection counts — no
-    # signature-table persist, no band self-join, no global distinct, no
-    # array-attaching verify joins. The exact-Jaccard verify semantics
-    # (set Jaccard over distinct shingles, |A∪B| by inclusion-exclusion)
-    # and the emitted pair set are unchanged; the oracle pins both.
+    # one bucket-keyed shuffle (each signed row replicated to its
+    # LSH_BANDS buckets, shingle array attached once) into the bucket
+    # kernel; set Jaccard over distinct shingles, |A∪B| by
+    # inclusion-exclusion (OPTIMIZATION_r06.md has the plan it replaced)
     sh = _signed(spark, sf_dir)
     ex = sh.select(
         "doc_id",
@@ -465,30 +338,38 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- SimHash ---
 
 
-def simhash_of(text) -> str:
-    """Scalar 64-bit SimHash, bit-identical to the batch `dedup_simhash`
-    vectorized kernel and the DuckDB `_SIMHASH_SQL` (equality pinned by
-    tests). Shared by the streaming near-dup operator, which signs one
-    Arrow batch of new docs at a time."""
-    import hashlib
+def _vote_row(w: str):
+    """The ±1 votes one word casts: bit0 of each of its md5 hex chars
+    1..32, then bit1 — its exact contribution to ``_SIMHASH_SQL``."""
+    codes = np.frombuffer(
+        hashlib.md5(w.encode("utf-8")).hexdigest().encode("ascii"), dtype=np.uint8
+    )
+    vals = np.where(codes >= 97, codes - 87, codes - 48)
+    return np.concatenate([vals & 1, (vals >> 1) & 1]).astype(np.int32) * 2 - 1
 
-    seen = set()
-    words = []
-    for w in (text or "").strip(" ").lower().split(" "):
-        if w and w not in seen:
-            seen.add(w)
-            words.append(w)
+
+def simhash_of(text, memo: Optional[dict] = None) -> str:
+    """64-bit SimHash, bit-identical to the DuckDB ``_SIMHASH_SQL``
+    (pinned by tests); the batch ``dedup_simhash`` and the streaming
+    near-dup operator both sign with it. ``memo`` keeps each word's vote
+    row across calls (capped like ``_MEMO_CAP``), so a task md5-hashes
+    each distinct word once instead of once per document (measured
+    10.3 s -> <1 s of serial kernel CPU at sf1.0). The integer vote sums
+    do not depend on word order."""
+    # mirror of list_distinct(list_filter(string_split(lower(trim(...)))))
+    words = set(filter(None, (text or "").strip(" ").lower().split(" ")))
     if not words:
         return "0" * SIMHASH_BITS
-    lsb = [0] * 32
-    b2 = [0] * 32
+    memo = {} if memo is None else memo
+    votes = np.zeros(SIMHASH_BITS, dtype=np.int32)
     for w in words:
-        h = hashlib.md5(w.encode("utf-8")).hexdigest()
-        for j, c in enumerate(h):
-            v = int(c, 16)
-            lsb[j] += 1 if v & 1 else -1
-            b2[j] += 1 if v & 2 else -1
-    return "".join("1" if v > 0 else "0" for v in lsb + b2)
+        r = memo.get(w)
+        if r is None:
+            r = _vote_row(w)
+            if len(memo) < _MEMO_CAP:
+                memo[w] = r
+        votes += r
+    return np.where(votes > 0, ord("1"), ord("0")).astype(np.uint8).tobytes().decode("ascii")
 
 
 _ODD_IN = ",".join(f"'{c}'" for c in _ODD_HEX)
@@ -496,7 +377,7 @@ _B2_IN = ",".join(f"'{c}'" for c in _B2_HEX)
 
 # bits 1..32 = parity (bit0) of hex chars 1..32; bits 33..64 = bit1 of
 # hex chars 1..32 — 64 independent bits from ONE md5 per token, portable
-# to DuckDB verbatim
+# to DuckDB verbatim (lower() aside: see the note above _SH_SQL)
 _SIMHASH_SQL = f"""
     SELECT doc_id,
            array_to_string(
@@ -530,420 +411,53 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interpreted by Catalyst at ~10x the CPU of hashlib — same
     # fast-path rationale as _signed above; the DuckDB oracle pins the
     # output bit-for-bit.
-    import hashlib
-
-    import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
     docs = spread_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("simhash", T.StringType()),
-        ]
-    )
+    schema = "doc_id long, simhash string"
 
     def gen(batches):
-        # r6: per-task memo word -> its 64-entry ±1 vote row (the bit0
-        # votes of hex chars 1..32, then the bit1 votes — the exact
-        # per-word contribution of the SQL formulation). Same voting
-        # integers as hashing each occurrence (integer sums are
-        # order-independent and duplicate-words are already removed), so
-        # the signature bits are identical while each distinct word is
-        # md5-hashed once per task instead of once per document
-        # (measured 10.3 s -> <1 s of serial kernel CPU at sf1.0).
-        # Capped like _MEMO_CAP for unbounded real vocabularies.
         memo: dict = {}
-        one = ord("1")
-        zero = ord("0")
-
-        def vote_row(w):
-            r = memo.get(w)
-            if r is None:
-                codes = np.frombuffer(
-                    hashlib.md5(w.encode("utf-8")).hexdigest().encode("ascii"),
-                    dtype=np.uint8,
-                )
-                vals = np.where(codes >= 97, codes - 87, codes - 48)
-                r = np.concatenate(
-                    [
-                        (vals & 1).astype(np.int32) * 2 - 1,
-                        ((vals >> 1) & 1).astype(np.int32) * 2 - 1,
-                    ]
-                )
-                if len(memo) < _MEMO_CAP:
-                    memo[w] = r
-            return r
-
         for pdf in batches:
-            out = []
-            for text in pdf["text"]:
-                # mirror of list_distinct(list_filter(string_split(...)))
-                seen = set()
-                words = []
-                for w in (text or "").strip(" ").lower().split(" "):
-                    if w and w not in seen:
-                        seen.add(w)
-                        words.append(w)
-                if not words:
-                    out.append("0" * SIMHASH_BITS)
-                    continue
-                votes = vote_row(words[0]).copy()
-                for w in words[1:]:
-                    votes += vote_row(w)
-                out.append(
-                    np.where(votes > 0, one, zero)
-                    .astype(np.uint8).tobytes().decode("ascii")
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "simhash": out})
+            sigs = [simhash_of(t, memo) for t in pdf["text"]]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "simhash": sigs})
 
     return docs.mapInPandas(gen, schema=schema)
 
 
 # --- exact n-gram Jaccard with blocking ---
 
-# triangle-tiling degree for the in-block pair enumeration: each block's
-# documents are split into _NGRAM_TILES deterministic hash groups and the
-# (group_i, group_j) i<=j tiles are counted as independent tasks, so one
-# hot (lang, length-band) block parallelizes across G(G+1)/2 tasks
-# instead of serializing on one. The cost is a Gx replication of the
-# skinny exploded stream through the one shuffle — the standard
-# all-pairs tiling trade (pair work stays identical, the straggler
-# drops ~G^2/2x). G=2 measured best at local[32]/sf1.0 (same-window A/B
-# vs G=1: 7.3 vs 11.2 s, G=4 pays more replication than it saves here);
-# production tuning: raise with cluster size / block skew.
+# tile degree G of the in-block pair enumeration (``blocked_pairs``): a
+# hot (lang, length-band) block splits over G(G+1)/2 tasks for a Gx
+# replication of the skinny exploded stream. G=2 measured best at
+# local[32]/sf1.0 (same-window A/B vs G=1: 7.3 vs 11.2 s; G=4 paid more
+# replication than it saved).
 _NGRAM_TILES = 2
-# per-tile memory caps for the counting strategies, in elements (~64 MB
-# at 4-8 B each): tiles whose count matrix (n_a x n_b) AND membership
-# matrices (docs x tile vocabulary) fit use one BLAS matmul; otherwise
-# counts fall back to a linear bincount over the rank rectangle, and
-# past _NGRAM_BIN_CAP to chunked sort-unique — so a mega block degrades
-# gracefully instead of blowing task memory. Module-level so tests can
-# force each path onto the same input.
-_NGRAM_MM_CAP = 1 << 24
-_NGRAM_BIN_CAP = 1 << 24
+# the query keeps pairs with round(jaccard, 6) >= 0.02, and rounding
+# moves a double by < 5e-7, so every surviving pair has raw jaccard >=
+# 0.0199995. Filtering on that bound in the kernel (same IEEE double
+# division the JVM does) drops ~20% of rows before the arrow->JVM
+# conversion while the JVM still applies the exact rounded predicate.
+_PRE_MIN = 0.02 - 5e-7
+
+
+def _ngram_pair_cols(sz_a, sz_b, c):
+    s = sz_a + sz_b
+    keep = c / (s - c) >= _PRE_MIN
+    return keep, [s, c]
 
 
 def _ngram_block_pair_counts(ex: DataFrame) -> DataFrame:
-    """FINAL co-occurrence pair counts over the exploded
-    ``(doc_id, lang, blk, sz, sh)`` stream, hash-partitioned by
-    BLOCK TILE ``(lang, blk, ti, tj)``.
-
-    r6 replacement for the self-join + two-level count plan
-    (OPTIMIZATION_r06.md): the SortMergeJoin emitted sum(m^2)
-    buffered-row combinations (231M at sf1.0) through join machinery, a
-    115M-row partial aggregate, a ~100M-row exchange (a pair's shared
-    shingles hash to distinct shingle partitions, so map-side partial
-    aggregation deduplicated almost nothing — measured 106M partial rows
-    for 26M pairs), and a 100M-row final aggregate. Keying the shuffle
-    by the block tile instead makes every pair's entire contribution
-    land in ONE task — a document belongs to exactly one (lang, blk)
-    block, its rows are replicated to the G tiles its hash group
-    participates in, and a pair (a, b) is counted exactly once, in tile
-    ``(min(g_a, g_b), max(g_a, g_b))`` (diagonal tiles enumerate
-    same-group pairs; off-diagonal tiles enumerate only the i x j
-    rectangle). The per-task numpy count is therefore already the exact
-    final count: no self-join, no pair-keyed exchange, no downstream
-    aggregate, and only the ~26M result rows (not 100M+ partials) cross
-    the Python->JVM boundary.
-
-    Per task: rows are grouped by (lang, blk, ti, tj, shingle) with
-    factorize + one lexsort, pairs are enumerated with numpy index
-    arithmetic in ~4M-pair chunks (bounded peak memory), counted per
-    chunk with ``np.unique``, and chunk counts are merged with one
-    sort + ``np.add.reduceat`` — exact integer arithmetic throughout.
-
-    Memory/skew envelope: one task holds its tiles' exploded rows plus
-    O(distinct pairs of its tiles) count entries — the same asymptotic
-    size as the query's own output for those pairs, so any block small
-    enough for its pair list to be *returned* is small enough to count.
-    Partition count follows ``spark.sql.shuffle.partitions`` (conf, not
-    a local constant); hot-block work splits G(G+1)/2 ways via tiling.
-    """
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("s", T.LongType()),
-            T.StructField("c", T.LongType()),
-        ]
-    )
-    _PAIR_CHUNK = 4_000_000
-    _OUT_BATCH = 1 << 20
-    # capture the caps driver-side so the executor closure sees the
-    # values in effect when the query was BUILT (tests force paths)
-    _MM_CAP = _NGRAM_MM_CAP
-    _BIN_CAP = _NGRAM_BIN_CAP
-    # conservative in-kernel threshold: the query keeps pairs with
-    # round(jaccard, 6) >= 0.02, and rounding moves a double by < 5e-7,
-    # so every surviving pair has raw jaccard >= 0.0199995. Filtering on
-    # that bound here (same IEEE double division the JVM would do)
-    # drops ~20% of rows before the arrow->JVM row conversion while the
-    # JVM still applies the exact rounded predicate — identical output.
-    _PRE_MIN = 0.02 - 5e-7
-    G = _NGRAM_TILES
-
-    def gen(batches):
-        # mapInArrow, not mapInPandas: the output is tens of millions of
-        # skinny numeric rows, and the pandas path re-slices it into
-        # arrow.maxRecordsPerBatch(=2048)-row record batches (measured
-        # 2.2 s of pure batching overhead on the hottest tile); arrow
-        # batches built straight from numpy are zero-copy and sized here
-        batches = list(batches)
-        if not batches:
-            return
-        tbl = pa.Table.from_batches(batches).combine_chunks()
-        n = tbl.num_rows
-        if not n:
-            return
-
-        # injective per-partition group code for (lang, blk, ti, tj, sh)
-        # without string concatenation: dictionary-encode the string
-        # columns (equality-preserving C++ pass) and detect group
-        # boundaries component-wise after one lexsort
-        def codes_of(name):
-            arr = tbl.column(name).combine_chunks()
-            return arr.dictionary_encode().indices.to_numpy()
-
-        lang_c = codes_of("lang")
-        sh_c = codes_of("sh")
-        blk = tbl.column("blk").combine_chunks().to_numpy()
-        ti = tbl.column("ti").combine_chunks().to_numpy()
-        tj = tbl.column("tj").combine_chunks().to_numpy()
-        grp = tbl.column("grp").combine_chunks().to_numpy()
-        ids = tbl.column("doc_id").combine_chunks().to_numpy()
-        szs = tbl.column("sz").combine_chunks().to_numpy()
-        # within a key group: tile-i rows first, then tile-j rows, each
-        # doc_id-ascending — the rectangle enumeration below relies on it
-        is_j = (grp != ti).astype(np.int8)
-        order = np.lexsort((ids, is_j, sh_c, tj, ti, blk, lang_c))
-        lc, bc, tic, tjc, sc = (
-            lang_c[order], blk[order], ti[order], tj[order], sh_c[order]
-        )
-        ids_s, szs_s, isj_s = ids[order], szs[order], is_j[order]
-        n_rows = len(ids_s)
-        newgrp = np.r_[
-            True,
-            (lc[1:] != lc[:-1]) | (bc[1:] != bc[:-1])
-            | (tic[1:] != tic[:-1]) | (tjc[1:] != tjc[:-1])
-            | (sc[1:] != sc[:-1]),
-        ]
-        grp_id = np.cumsum(newgrp) - 1
-        sizes = np.bincount(grp_id)
-        ends = np.cumsum(sizes)
-        g_start = ends - sizes
-        arange_n = np.arange(n_rows)
-        # pair enumeration per key group, exactly once per pair:
-        # - diagonal tile (ti == tj): every ordered pair among the
-        #   group's rows (doc_id-ascending => id_a < id_b strictly);
-        # - cross tile (ti != tj): only the tile-i x tile-j rectangle —
-        #   same-group pairs belong to their diagonal tile. A doc is in
-        #   exactly one hash group, so a != b always; min/max orders the
-        #   emitted pair.
-        is_cross = tic != tjc
-        n_i = np.bincount(grp_id, weights=1 - isj_s).astype(np.int64)
-        js = g_start[grp_id] + n_i[grp_id]          # first j-row index
-        e = ends[grp_id]
-        reps = np.where(
-            is_cross,
-            np.where(isj_s.astype(bool), 0, e - js),
-            e - arange_n - 1,
-        )
-        base = np.where(is_cross, js, arange_n + 1)
-        # tile boundaries (coarser than key groups: shingle excluded) —
-        # counting runs per tile so the pair-code space is the tile's
-        # rank rectangle and counts fall out of one linear np.bincount
-        # instead of a sort (the sort-based np.unique counting was ~60%
-        # of the kernel's CPU at sf1.0)
-        newtile = np.r_[
-            True,
-            (lc[1:] != lc[:-1]) | (bc[1:] != bc[:-1])
-            | (tic[1:] != tic[:-1]) | (tjc[1:] != tjc[:-1]),
-        ]
-        tile_starts = np.flatnonzero(newtile)
-        tile_bounds = np.r_[tile_starts, n_rows]
-        cum = np.cumsum(reps)
-        offs_all = cum - reps
-        out_a, out_b, out_sa, out_c = [], [], [], []
-        for t0, t1 in zip(tile_bounds[:-1], tile_bounds[1:]):
-            t_reps = reps[t0:t1]
-            total_t = int(cum[t1 - 1] - offs_all[t0])
-            if not total_t:
-                continue
-            t_ids = ids_s[t0:t1]
-            t_szs = szs_s[t0:t1]
-            t_isj = isj_s[t0:t1].astype(bool)
-            cross = bool(is_cross[t0])
-            # per-side rank dictionaries (sorted by doc_id, so rank
-            # order == id order)
-            if cross:
-                uids_a, ra_inv = np.unique(t_ids[~t_isj], return_inverse=True)
-                uids_b, rb_inv = np.unique(t_ids[t_isj], return_inverse=True)
-            else:
-                uids_a, all_inv = np.unique(t_ids, return_inverse=True)
-                uids_b = uids_a
-            W = len(uids_b)
-            rk = np.empty(t1 - t0, dtype=np.int64)
-            if cross:
-                rk[~t_isj] = ra_inv
-                rk[t_isj] = rb_inv
-            else:
-                rk = all_inv.astype(np.int64)
-            sz_of_a = np.empty(len(uids_a), dtype=np.int64)
-            sz_of_a[rk[~t_isj]] = t_szs[~t_isj]
-            if cross:
-                sz_of_b = np.empty(W, dtype=np.int64)
-                sz_of_b[rk[t_isj]] = t_szs[t_isj]
-            else:
-                sz_of_b = sz_of_a
-            n_a = len(uids_a)
-            v_uniq, v_inv = np.unique(sc[t0:t1], return_inverse=True)
-            v = len(v_uniq)
-            # dense-matmul fast path (same structure as the minhash
-            # bucket kernel): build the tile's 0/1 doc x local-shingle
-            # membership matrices and get ALL pair counts from one BLAS
-            # matmul — no pair enumeration at all. Exact: one row per
-            # (doc, distinct shingle) so entries are 0/1, and float32
-            # counts are exact below 2^24. Falls back to the chunked
-            # enumeration + bincount path when the count matrix or the
-            # membership matrices would exceed the memory cap (mega
-            # blocks / unbounded real-corpus block vocabularies).
-            use_mm = (
-                n_a * W <= _MM_CAP and max(n_a, W) * v <= _MM_CAP
-            )
-            if use_mm:
-                if cross:
-                    A = np.zeros((n_a, v), dtype=np.float32)
-                    A[rk[~t_isj], v_inv[~t_isj]] = 1.0
-                    Bm = np.zeros((W, v), dtype=np.float32)
-                    Bm[rk[t_isj], v_inv[t_isj]] = 1.0
-                    C = A @ Bm.T
-                    ra, rb = np.nonzero(C)
-                else:
-                    A = np.zeros((n_a, v), dtype=np.float32)
-                    A[rk, v_inv] = 1.0
-                    C = A @ A.T
-                    ra, rb = np.nonzero(C)
-                    up = ra < rb
-                    ra, rb = ra[up], rb[up]
-                if not len(ra):
-                    continue
-                c = C[ra, rb].astype(np.int64)
-            else:
-                nbins = n_a * W
-                use_bins = nbins <= _BIN_CAP
-                bins = np.zeros(nbins, dtype=np.int64) if use_bins else None
-                code_parts, cnt_parts = [], []
-                # chunked enumeration bounds within the tile
-                t_cum = cum[t0:t1] - offs_all[t0]
-                n_chunks = max(1, -(-total_t // _PAIR_CHUNK))
-                cuts = np.searchsorted(
-                    t_cum, np.arange(1, n_chunks) * _PAIR_CHUNK, side="left"
-                ) + 1
-                bnds = np.unique(np.r_[0, cuts, t1 - t0])
-                for lo, hi in zip(bnds[:-1], bnds[1:]):
-                    reps_c = t_reps[lo:hi]
-                    m = int(reps_c.sum())
-                    if not m:
-                        continue
-                    a_loc = np.repeat(np.arange(lo, hi), reps_c)
-                    b_loc = (
-                        np.arange(m)
-                        - (offs_all[t0 + a_loc] - offs_all[t0 + lo])
-                        + base[t0 + a_loc]
-                    ) - t0
-                    code = rk[a_loc] * W + rk[b_loc]
-                    if use_bins:
-                        bins += np.bincount(code, minlength=nbins)
-                    else:
-                        ucode, cnt = np.unique(code, return_counts=True)
-                        code_parts.append(ucode)
-                        cnt_parts.append(cnt.astype(np.int64))
-                if use_bins:
-                    nz = np.flatnonzero(bins)
-                    if not len(nz):
-                        continue
-                    ucode, c = nz, bins[nz]
-                else:
-                    if not code_parts:
-                        continue
-                    codes = np.concatenate(code_parts)
-                    cnts = np.concatenate(cnt_parts)
-                    o2 = np.argsort(codes, kind="stable")
-                    codes, cnts = codes[o2], cnts[o2]
-                    st = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])
-                    ucode, c = codes[st], np.add.reduceat(cnts, st)
-                ra, rb = ucode // W, ucode % W
-            s = sz_of_a[ra] + sz_of_b[rb]
-            # conservative pre-filter (see _PRE_MIN above): identical
-            # IEEE division to the JVM's, keeping a provable superset of
-            # the rounded predicate's survivors
-            keep = c.astype(np.float64) / (s - c) >= _PRE_MIN
-            if not keep.any():
-                continue
-            ra, rb, s, c = ra[keep], rb[keep], s[keep], c[keep]
-            ia, ib = uids_a[ra], uids_b[rb]
-            if cross:
-                # order each emitted pair by doc_id (sides are disjoint)
-                swap = ia > ib
-                ia2 = np.where(swap, ib, ia)
-                ib = np.where(swap, ia, ib)
-                ia = ia2
-            out_a.append(ia)
-            out_b.append(ib)
-            out_sa.append(s)
-            out_c.append(c)
-        if not out_a:
-            return
-        id_a = np.concatenate(out_a)
-        id_b = np.concatenate(out_b)
-        s_all = np.concatenate(out_sa)
-        c_all = np.concatenate(out_c)
-        for lo in range(0, len(id_a), _OUT_BATCH):
-            hi = min(lo + _OUT_BATCH, len(id_a))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(id_a[lo:hi], type=pa.int64()),
-                    pa.array(id_b[lo:hi], type=pa.int64()),
-                    pa.array(s_all[lo:hi], type=pa.int64()),
-                    pa.array(c_all[lo:hi], type=pa.int64()),
-                ],
-                names=["id_a", "id_b", "s", "c"],
-            )
-
-    # deterministic doc hash group + the G tiles each row participates in
-    grp = F.pmod(F.xxhash64("doc_id"), F.lit(G)).cast("int")
-    tiles = F.transform(
-        F.sequence(F.lit(0), F.lit(G - 1)),
-        lambda t: F.struct(
-            F.least(F.col("grp"), t).alias("ti"),
-            F.greatest(F.col("grp"), t).alias("tj"),
-        ),
-    )
-    tiled = (
-        ex.withColumn("grp", grp)
-        .withColumn("tile", F.explode(tiles))
-        .select("doc_id", "lang", "blk", "sz", "sh", "grp",
-                F.col("tile.ti").alias("ti"), F.col("tile.tj").alias("tj"))
-    )
-    # explicit partition count (4x the configured shuffle parallelism,
-    # scale-adaptive via conf, NOT a local constant): tile keys are few,
-    # so letting AQE coalesce this exchange by its INPUT size stacks
-    # multiple tiles onto one task while the task's real work is
-    # quadratic in tile size (measured: 18 coalesced tasks, 1.6-9.0 s
-    # spread). More slots than tiles keeps tasks to ~one big tile each
-    # (guide §2.5).
-    n_parts = 4 * int(ex.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return tiled.repartition(n_parts, "lang", "blk", "ti", "tj").mapInArrow(
-        gen, schema=schema
-    )
+    """FINAL co-occurrence pair counts (id_a, id_b, s = |A| + |B|, c =
+    |A ∩ B|) over the exploded ``(doc_id, lang, blk, sh)`` stream: the
+    blocked-pair kernel over BLOCK TILES ``(lang, blk, ti, tj)`` with the
+    set-overlap scorer. A doc belongs to one (lang, blk) block and a pair
+    meets in one tile, so each task's counts are final — no self-join,
+    no pair-keyed exchange, no downstream aggregate."""
+    return blocked_pairs(ex, ["lang", "blk"], "id_a long, id_b long, s long, c long",
+                         set_overlap("sh", _ngram_pair_cols), tiles=_NGRAM_TILES)
 
 
 @register(
@@ -966,23 +480,14 @@ def _ngram_block_pair_counts(ex: DataFrame) -> DataFrame:
     doc="training-data op: exact n-gram Jaccard dedup with (lang, length-band) blocking",
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r6 plan (guide §2.3/§4.2; evidence in OPTIMIZATION_r06.md): one
-    # skinny shuffle of the exploded (doc, shingle) stream keyed by the
-    # BLOCK TILE, then the whole pair enumeration + exact counting runs
-    # as a vectorized numpy kernel per task — pairs never span blocks,
-    # so the per-task counts are final: no self-join, no pair-keyed
-    # exchange, no downstream aggregate. Work stays proportional to the
-    # actual shingle co-occurrences (pairs with an empty intersection
-    # never materialize), as in the r3-r5 explode-join plan, minus that
-    # plan's 100M-row partial exchange and 231M-row join emission.
-    sh = _shingled(spark, sf_dir).select(
+    # one skinny shuffle of the exploded (doc, shingle) stream keyed by
+    # the block tile (OPTIMIZATION_r06.md has the self-join plan it
+    # replaced); pairs with an empty intersection never materialize
+    ex = _shingled(spark, sf_dir).select(
         "doc_id",
         "lang",
         F.floor(F.col("n_chars") / 50).cast("int").alias("blk"),
-        F.array_distinct("shingles").alias("s"),
-    )
-    ex = sh.select(
-        "doc_id", "lang", "blk", F.size("s").alias("sz"), F.explode("s").alias("sh")
+        F.explode(F.array_distinct("shingles")).alias("sh"),
     )
     common = _ngram_block_pair_counts(ex)
     # s = |A|+|B| from the kernel, so |A∪B| = s − c (inclusion-exclusion
@@ -1020,7 +525,7 @@ _HAMMING_SQL = "(" + " + ".join(
     """,
     doc=(
         "training-data op: SimHash near-dup pairs via banded Hamming join — "
-        "4x16-bit bands, equi-join per band (pigeonhole-complete at Hamming<=3), "
+        "4x16-bit bands, pairs per band bucket (pigeonhole-complete at Hamming<=3), "
         "exact popcount verify; oracle uses the all-pairs form at oracle scale"
     ),
 )
@@ -1029,16 +534,8 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pigeonhole, any pair within Hamming distance 3 shares at least one
     # exact band, so the banded candidate set is COMPLETE (identical
     # rows to the oracle's all-pairs scan) while never materializing
-    # zero-overlap pairs. r6 (OPTIMIZATION_r06.md): the band self-join +
-    # global distinct + two joins attaching signature strings + 64
-    # interpreted substring comparisons per pair took 250 s at sf1.0
-    # (136M band-collision pairs — the biased synthetic vocabulary makes
-    # 16-bit band buckets of up to 7.5k docs). Replaced by one
-    # bucket-keyed shuffle and a numpy kernel per task: signatures
-    # packed to uint64, Hamming = XOR + SWAR popcount over each
-    # bucket's triangle (chunked), cross-band pair dedup via the local
-    # min-band rule — integer-exact output, no distinct exchange, no
-    # verify joins, no persist.
+    # zero-overlap pairs. The biased synthetic vocabulary makes 16-bit
+    # band buckets of up to 7.5k docs at sf1.0 (OPTIMIZATION_r06.md).
     sigs = dedup_simhash(spark, sf_dir)
     ex = sigs.select(
         "doc_id",
@@ -1055,124 +552,45 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _simhash_bucket_pairs(ex)
 
 
-def _simhash_bucket_pairs(ex: DataFrame) -> DataFrame:
-    """Exact Hamming pairs (<= SIMHASH_HAMMING_K) per LSH band bucket.
+def _simhash_bands(tbl):
+    """(n, 4) uint16 codes of each row's four 16-bit signature bands."""
+    sig = column(tbl, "simhash")
+    bits = np.frombuffer(
+        "".join(sig.to_pylist()).encode("ascii"), dtype=np.uint8
+    ).reshape(len(sig), SIMHASH_BITS) - ord("0")
+    packed = np.packbits(bits, axis=1)
+    return packed[:, 0::2].astype(np.uint16) * 256 + packed[:, 1::2]
 
-    Same shape as ``_lsh_bucket_pair_counts``: each (doc, band) row is
-    shuffled once to its ``(band_idx, band)`` bucket carrying the full
-    64-char signature; each task packs signatures to uint64 (any
-    consistent bit packing preserves Hamming distance), enumerates each
-    bucket's ordered triangle in ~4M-pair chunks, computes Hamming with
-    one vectorized XOR + SWAR popcount (streaming/pipeline.py's
-    ``_popcount64``), deduplicates across bands with the min-band rule
-    (the 4 16-bit band codes are the packed signature's uint16 chunks),
-    and emits only pairs at Hamming <= K — all-integer arithmetic, so
-    the rows are exact with no JVM re-verification.
-    """
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql import types as T
 
+def _hamming(tbl, cap):
+    """Scorer: pairs within Hamming distance SIMHASH_HAMMING_K, by XOR +
+    SWAR popcount over signatures packed to uint64 (any consistent bit
+    packing preserves Hamming distance)."""
     from onnxocr_ray_spark.streaming.pipeline import _popcount64
 
-    schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("hamming", T.LongType()),
-        ]
-    )
-    _PAIR_CHUNK = 4_000_000
+    sig = np.ascontiguousarray(_simhash_bands(tbl)).view(np.uint64).ravel()
 
-    def gen(batches):
-        batches = list(batches)
-        if not batches:
-            return
-        tbl = pa.Table.from_batches(batches).combine_chunks()
-        n = tbl.num_rows
-        if not n:
-            return
-        ids = tbl.column("doc_id").combine_chunks().to_numpy()
-        band_idx = tbl.column("band_idx").combine_chunks().to_numpy()
-        band_c = (
-            tbl.column("band").combine_chunks()
-            .dictionary_encode().indices.to_numpy()
-        )
-        sig_str = tbl.column("simhash").combine_chunks()
-        bits = (
-            np.frombuffer(
-                "".join(sig_str.to_pylist()).encode("ascii"), dtype=np.uint8
-            ).reshape(n, SIMHASH_BITS)
-            - ord("0")
-        )
-        packed = np.packbits(bits, axis=1)              # (n, 8) uint8
-        sig64 = packed.copy().view(np.uint64).ravel()   # hamming-preserving
-        band16 = (
-            packed[:, 0::2].astype(np.uint16) * 256
-            + packed[:, 1::2].astype(np.uint16)
-        )                                               # (n, 4) band codes
-        order = np.lexsort((ids, band_c, band_idx))
-        bi_s, bc_s, ids_s = band_idx[order], band_c[order], ids[order]
-        sig_s, b16_s = sig64[order], band16[order]
-        newb = np.r_[True, (bi_s[1:] != bi_s[:-1]) | (bc_s[1:] != bc_s[:-1])]
-        starts = np.flatnonzero(newb)
-        bounds = np.r_[starts, n]
-        out_a, out_b, out_h = [], [], []
-        for s0, s1 in zip(bounds[:-1], bounds[1:]):
-            m = s1 - s0
-            if m < 2:
-                continue
-            bi = int(bi_s[s0])
-            b_ids = ids_s[s0:s1]
-            b_sig = sig_s[s0:s1]
-            b_b16 = b16_s[s0:s1]
-            reps = np.arange(m - 1, -1, -1, dtype=np.int64)
-            cum = np.cumsum(reps)
-            offs = cum - reps
-            total = int(cum[-1])
-            n_chunks = max(1, -(-total // _PAIR_CHUNK))
-            cuts = np.searchsorted(
-                cum, np.arange(1, n_chunks) * _PAIR_CHUNK, side="left"
-            ) + 1
-            bnds = np.unique(np.r_[0, cuts, m])
-            for lo, hi in zip(bnds[:-1], bnds[1:]):
-                reps_c = reps[lo:hi]
-                mm = int(reps_c.sum())
-                if not mm:
-                    continue
-                a_idx = np.repeat(np.arange(lo, hi), reps_c)
-                b_idx = np.arange(mm) - (offs[a_idx] - offs[lo]) + a_idx + 1
-                if bi > 0:
-                    keep = np.ones(mm, dtype=bool)
-                    for bb in range(bi):
-                        keep &= b_b16[a_idx, bb] != b_b16[b_idx, bb]
-                    a_idx, b_idx = a_idx[keep], b_idx[keep]
-                    if not len(a_idx):
-                        continue
-                ham = _popcount64(
-                    (b_sig[a_idx] ^ b_sig[b_idx]).view(np.uint64)
-                ).astype(np.int64)
-                sel = ham <= SIMHASH_HAMMING_K
-                if not sel.any():
-                    continue
-                out_a.append(b_ids[a_idx[sel]])
-                out_b.append(b_ids[b_idx[sel]])
-                out_h.append(ham[sel])
-        if not out_a:
-            return
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.concatenate(out_a), type=pa.int64()),
-                pa.array(np.concatenate(out_b), type=pa.int64()),
-                pa.array(np.concatenate(out_h), type=pa.int64()),
-            ],
-            names=["id_a", "id_b", "hamming"],
-        )
+    def block(blk):
+        sa, sb = sig[blk.a], sig[blk.b]
 
-    n_parts = int(ex.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return ex.repartition(n_parts, "band_idx", "band").mapInArrow(
-        gen, schema=schema
-    )
+        def chunk(lo, hi, c0, c1):
+            a, b = grid(lo, hi, c0, c1, blk.tri)
+            ham = _popcount64(sa[a] ^ sb[b]).astype(np.int64)
+            keep = ham <= SIMHASH_HAMMING_K
+            return a[keep], b[keep], [ham[keep]]
+
+        return chunk
+
+    return block
+
+
+def _simhash_bucket_pairs(ex: DataFrame) -> DataFrame:
+    """Exact Hamming pairs (<= SIMHASH_HAMMING_K), one per pair: the
+    blocked-pair kernel over BUCKETS ``(band_idx, band)``, each row
+    carrying the full signature, with the ``_hamming`` scorer and the
+    min-band rule. All-integer, so no JVM re-verification."""
+    return blocked_pairs(ex, ["band_idx", "band"], "id_a long, id_b long, hamming long",
+                         _hamming, min_band=_simhash_bands)
 
 
 # --- passage-level (C4-style) boilerplate dedup ---

@@ -14,10 +14,12 @@ Embedding near-dup (the dedup-family member) also lives here:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from onnxocr_ray_spark.functions import cosine_sim
+from onnxocr_ray_spark.operators.pairs import blocked_pairs, column, upper
 from onnxocr_ray_spark.registry import register
 from onnxocr_ray_spark.sources.tables import load_table, spread_scan
 
@@ -73,6 +75,17 @@ _BUCKET_SQL = (
 )
 
 
+def _sign_bucket():
+    """The sign pattern of the first 6 dimensions: ``_BUCKET_SQL``."""
+    return F.array_join(
+        F.transform(
+            F.slice(F.col("v"), 1, 6),
+            lambda x: F.when(x >= 0, F.lit("1")).otherwise(F.lit("0")),
+        ),
+        "",
+    )
+
+
 @register(
     "ann_lsh_bucket",
     sql=f"""
@@ -89,14 +102,7 @@ _BUCKET_SQL = (
 )
 def ann_lsh_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _vecs(spark, sf_dir)
-    bucket = F.array_join(
-        F.transform(
-            F.slice(F.col("v"), 1, 6),
-            lambda x: F.when(x >= 0, F.lit("1")).otherwise(F.lit("0")),
-        ),
-        "",
-    )
-    eb = e.select("vec_id", "v", bucket.alias("bucket"))
+    eb = e.select("vec_id", "v", _sign_bucket().alias("bucket"))
     q = eb.filter(F.col("vec_id") == 0).select(
         F.col("v").alias("qv"), F.col("bucket").alias("qbucket")
     )
@@ -134,37 +140,23 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucket collisions pay the 64-dim cosine verify; bits scale with
     # corpus size (6 here, more at 10^12 docs). The oracle computes the
     # identical blocking, so rows match exactly.
-    # r6: the per-pair verify runs in the shared cluster-cosine kernel
-    # (BLAS prescreen + bit-exact re-evaluation, see
-    # _cluster_cos_candidates) instead of an interpreted cosine fold on
-    # every self-join row; the block key rides as one injective string
-    # (bucket is fixed-width, so the concat cannot collide across
-    # blocks) and the exact rounded threshold stays in the JVM.
+    # The verify runs in the cluster-cosine kernel with the block key as
+    # one injective string (the bucket is fixed-width and has no "|"),
+    # and each pair carries it out, so the label is split back off it.
     e = _vecs(spark, sf_dir)
-    bucket = F.array_join(
-        F.transform(
-            F.slice(F.col("v"), 1, 6),
-            lambda x: F.when(x >= 0, F.lit("1")).otherwise(F.lit("0")),
-        ),
-        "",
-    )
-    eb = e.select("vec_id", "label", "v", bucket.alias("bucket"))
-    member = eb.select(
+    member = e.select(
         "vec_id",
-        F.concat(F.col("bucket"), F.lit("|"), F.col("label")).alias("cid"),
+        F.concat(_sign_bucket(), F.lit("|"), F.col("label")).alias("cid"),
         "v",
     )
     cands = _cluster_cos_candidates(member, tau=0.3)
-    labels = eb.select(F.col("vec_id").alias("id_a"), "label")
-    return (
-        cands.filter(F.round(F.col("cos"), 6) >= 0.3)
-        .select(
-            F.col("ib").alias("id_a"),
-            F.col("vec_id").alias("id_b"),
-            F.round(F.col("cos"), 6).alias("cos"),
-        )
-        .join(F.broadcast(labels), "id_a")
-        .select("id_a", "id_b", "label", "cos")
+    return cands.filter(F.round(F.col("cos"), 6) >= 0.3).select(
+        F.col("ib").alias("id_a"),
+        F.col("vec_id").alias("id_b"),
+        F.substring_index("cid", "|", -1).cast(
+            e.schema["label"].dataType
+        ).alias("label"),
+        F.round(F.col("cos"), 6).alias("cos"),
     )
 
 
@@ -692,15 +684,10 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by construction when K tracks corpus size. No global
     pairwise join exists anywhere in the plan.
 
-    r6 (OPTIMIZATION_r06.md): the in-cluster verify used to run the
-    interpreted 64-dim ``cosine_sim`` fold as a LEFT-join condition —
-    sum(cluster^2) pair evaluations through Catalyst's interpreter
-    (~276 s at sf1.0, 25M pairs over K=8 clusters). The pairwise pass
-    now runs per cluster in ``_cluster_cos_candidates``: a BLAS matmul
-    prescreen with a wide safety margin, then a bit-exact sequential
-    re-evaluation (the same left-to-right IEEE fold as ``cosine_sim``)
-    of the few candidate pairs, whose raw cosine the JVM rounds and
-    thresholds exactly as before — identical keep decisions.
+    The pairwise pass runs per cluster in ``_cluster_cos_candidates``
+    (BLAS prescreen, then the bit-exact ``cosine_sim`` fold), and the JVM
+    rounds and thresholds its raw cosine (OPTIMIZATION_r06.md has the
+    interpreted join plan it replaced).
     """
     e = _vecs(spark, sf_dir)
     c = e.filter(F.col("vec_id") < _IVF_K).select(
@@ -724,103 +711,63 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cosine(tau: float):
+    """Scorer: pairs whose cosine can reach ``tau``, with ``cos``
+    BIT-IDENTICAL to ``functions.cosine_sim``.
+
+    A BLAS prescreen of the window keeps pairs with approximate cosine
+    >= tau − 1e-5: the sequential-vs-pairwise summation difference over
+    64 O(1) terms is below ~64·eps·sum|x·y| (< 1e-12), so no qualifying
+    pair escapes the margin. Kept pairs are re-evaluated with the
+    left-to-right fold ``acc = acc + x_k*y_k``, norms with the same fold,
+    and ``dot / (sqrt(na)*sqrt(nb))`` — the IEEE double sequence
+    Catalyst evaluates for ``cosine_sim``, so the JVM's round(·, 6) sees
+    the same bits."""
+    margin = 1e-5
+
+    def part(tbl, cap):
+        v = column(tbl, "v")
+        V = v.flatten().to_numpy().reshape(len(v), -1)
+        cid = column(tbl, "cid").to_numpy(zero_copy_only=False)
+
+        def block(blk):
+            key = cid[blk.rows.start]
+            VA, VB = V[blk.a], V[blk.b]
+            na, nb = _fold_norm(VA), _fold_norm(VB)
+            VAT, VBT = VA.T.copy(), VB.T.copy()
+
+            def chunk(lo, hi, c0, c1):
+                R = (VA[lo:hi] @ VB[c0:c1].T) / (na[lo:hi, None] * nb[None, c0:c1])
+                a, b = np.nonzero(R >= tau - margin)
+                a, b = upper(a + lo, b + c0, blk.tri)
+                acc = np.zeros(len(a))
+                for k in range(len(VAT)):
+                    acc = acc + VAT[k, a] * VBT[k, b]
+                return a, b, [acc / (na[a] * nb[b]), np.full(len(a), key, dtype=cid.dtype)]
+
+            return chunk
+
+        return block
+
+    return part
+
+
+def _fold_norm(V):
+    """sqrt of each row's sum of squares, folded left to right."""
+    ns = np.zeros(len(V))
+    for k in range(V.shape[1]):
+        ns = ns + V[:, k] * V[:, k]
+    return np.sqrt(ns)
+
+
 def _cluster_cos_candidates(member: DataFrame, tau: float = _SEMDEDUP_TAU) -> DataFrame:
-    """(vec_id, ib, cos) for in-cluster pairs with ``ib < vec_id`` whose
-    cosine can reach ``tau`` — a conservative superset, with ``cos``
-    BIT-IDENTICAL to ``functions.cosine_sim``. The blocking column
-    ``cid`` may be any equality-comparable type (dictionary-encoded in
-    the kernel); SemDeDup blocks on the IVF cluster id, the embedding
-    near-dup pairs on the (sign-bucket, label) block key.
-
-    Per task (one shuffle on cid): each cluster's vectors form a
-    row-sorted (by vec_id) float64 matrix. A BLAS ``block @ V.T``
-    prescreen finds pairs with approximate cosine >= tau − 1e-5 — the
-    sequential-vs-pairwise summation difference over 64 O(1) terms is
-    bounded by ~64·eps·sum|x·y| (< 1e-12), so no qualifying pair can
-    escape the margin. Surviving pairs are re-evaluated with the exact
-    left-to-right fold ``acc = acc + x_k*y_k`` (k ascending), norms with
-    the same fold per vector, and ``dot / (sqrt(na)*sqrt(nb))`` in that
-    operation order — the identical IEEE double sequence Catalyst
-    evaluates for ``cosine_sim``, so the JVM's subsequent round(·, 6)
-    sees the same bits. Memory is bounded by the 512-row block times
-    cluster width; per-cluster work is cluster^2 (the query's own
-    envelope, see the mega-cluster stress test).
-    """
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("ib", T.LongType()),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
-    _BLK = 512
-    _MARGIN = 1e-5
-
-    def gen(batches):
-        batches = list(batches)
-        if not batches:
-            return
-        tbl = pa.Table.from_batches(batches).combine_chunks()
-        n = tbl.num_rows
-        if not n:
-            return
-        ids = tbl.column("vec_id").combine_chunks().to_numpy()
-        cids = (
-            tbl.column("cid").combine_chunks()
-            .dictionary_encode().indices.to_numpy()
-        )
-        v_arr = tbl.column("v").combine_chunks()
-        dim = len(v_arr[0])
-        flat = v_arr.flatten().to_numpy()
-        V_all = flat.reshape(n, dim)
-        order = np.lexsort((ids, cids))
-        ids_s, cids_s, V_all = ids[order], cids[order], V_all[order]
-        starts = np.flatnonzero(np.r_[True, cids_s[1:] != cids_s[:-1]])
-        bounds = np.r_[starts, n]
-        out_j, out_i, out_c = [], [], []
-        for s0, s1 in zip(bounds[:-1], bounds[1:]):
-            m = s1 - s0
-            if m < 2:
-                continue
-            V = V_all[s0:s1]
-            vid = ids_s[s0:s1]
-            # exact norms: the same sequential fold as cosine_sim
-            ns = np.zeros(m)
-            for k in range(dim):
-                ns = ns + V[:, k] * V[:, k]
-            sn = np.sqrt(ns)
-            for b0 in range(0, m, _BLK):
-                b1 = min(b0 + _BLK, m)
-                R = (V[b0:b1] @ V.T) / (sn[b0:b1, None] * sn[None, :])
-                jj, ii = np.nonzero(R >= tau - _MARGIN)
-                jj = jj + b0
-                keep = ii < jj          # partner must have the LOWER id
-                jj, ii = jj[keep], ii[keep]
-                if not len(jj):
-                    continue
-                # bit-exact re-evaluation of the candidate pairs
-                A, B = V[jj], V[ii]
-                acc = np.zeros(len(jj))
-                for k in range(dim):
-                    acc = acc + A[:, k] * B[:, k]
-                cos = acc / (sn[jj] * sn[ii])
-                out_j.append(vid[jj])
-                out_i.append(vid[ii])
-                out_c.append(cos)
-        if not out_j:
-            return
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.concatenate(out_j), type=pa.int64()),
-                pa.array(np.concatenate(out_i), type=pa.int64()),
-                pa.array(np.concatenate(out_c), type=pa.float64()),
-            ],
-            names=["vec_id", "ib", "cos"],
-        )
-
-    n_parts = int(member.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return member.repartition(n_parts, "cid").mapInArrow(gen, schema=schema)
+    """(ib, vec_id, cos, cid) for in-cluster pairs with ``ib < vec_id``
+    whose cosine can reach ``tau`` — a superset, with ``cos`` exact
+    (``_cosine``): the blocked-pair kernel over ``cid``, which may be any
+    string or integer block key and rides out with each pair. SemDeDup
+    blocks on the IVF cluster id, the embedding near-dup pairs on the
+    (sign-bucket, label) key. Per-cluster work is cluster^2, memory is
+    bounded by ``PAIR_CAP`` (see the giant-cluster stress test)."""
+    cid_type = member.schema["cid"].dataType.simpleString()
+    return blocked_pairs(member, ["cid"], f"ib long, vec_id long, cos double, cid {cid_type}",
+                         _cosine(tau), id_col="vec_id")

@@ -28,9 +28,11 @@ Spark-native operational machinery:
   so no listing or schema-inference job runs. One ``groupBy(wp)``
   aggregation is collected: at most ``n_buckets`` rows of
   (n_docs, n_spans, bucket checksum), so lineage always describes
-  WRITTEN data. The run's ``n_docs`` and ``processed_buckets`` come from
-  the same rows, and the driver appends them to ``lineage/`` as one
-  parquet file, renamed into place once complete.
+  WRITTEN data. A to-do bucket with no written data gets a row with
+  ``n_docs = n_spans = 0`` and the checksum of no docs, so a rerun skips
+  it too. The run's ``n_docs`` and ``processed_buckets`` come from the
+  same rows, and the driver appends them to ``lineage/`` as one parquet
+  file, renamed into place once complete.
 - The bucket checksum is sha256 over the sorted per-url checksums — a
   deterministic content fingerprint that any replay must reproduce.
 - A crash between data write and lineage append merely causes those
@@ -43,6 +45,7 @@ driver-side.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import time
 import uuid
@@ -67,6 +70,8 @@ LINEAGE_SCHEMA = (
 # the columns of the written data that the lineage aggregation reads
 _READBACK_SCHEMA = "n_spans int, checksum string, wp int"
 _DISCOVERY_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+# the bucket checksum of a bucket without docs: sha256 over no checksums
+_EMPTY_CHECKSUM = hashlib.sha256(b"").hexdigest()
 
 
 @dataclass
@@ -212,21 +217,24 @@ def run_extraction(
         .partitionBy("wp")
         .parquet(_data_dir(output_dir))
     )
-    facts = _bucket_facts(spark, _data_dir(output_dir), todo_wps)
+    facts = {f["wp"]: f.asDict() for f in _bucket_facts(spark, _data_dir(output_dir), todo_wps)}
+    # a bucket without pages is committed as empty, so a rerun skips it
+    rows = [
+        facts.get(wp, dict(wp=wp, n_docs=0, n_spans=0, bucket_checksum=_EMPTY_CHECKSUM))
+        for wp in todo_wps
+    ]
     wall = round(time.perf_counter() - t0, 3)
-
-    if facts:
-        committed_at = time.time()
-        _append_lineage(output_dir, [
-            dict(f.asDict(), snapshot_id=snapshot_id, run_id=run_id,
-                 wall_sec=wall, committed_at=committed_at)
-            for f in facts
-        ])
+    committed_at = time.time()
+    _append_lineage(output_dir, [
+        dict(r, snapshot_id=snapshot_id, run_id=run_id, wall_sec=wall,
+             committed_at=committed_at)
+        for r in rows
+    ])
     return ExtractionRun(
         output_dir=output_dir,
         n_buckets=n_buckets,
-        processed_buckets=len(facts),
+        processed_buckets=len(rows),
         skipped_buckets=len(done),
-        n_docs=sum(f["n_docs"] for f in facts),
+        n_docs=sum(r["n_docs"] for r in rows),
         wall_sec=wall,
     )

@@ -49,7 +49,9 @@ def iceberg_available(spark: SparkSession) -> bool:
 # ``spark.read.parquet`` measured ~90 ms per call (footer read + FS init
 # through py4j), paid inside every timed query build; a long session
 # re-reads the same handful of tables hundreds of times. WeakKey'd on
-# the SparkSession so a stopped session's handles die with it.
+# the SparkSession so a stopped session's handles die with it. A handle
+# is keyed on the path's (mtime, size, inode) too, so a table rewritten
+# in the session is listed again instead of read through its old files.
 import weakref
 
 _TABLE_HANDLES: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
@@ -65,12 +67,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if catalog and iceberg_available(spark):  # pragma: no cover - needs jar
         return spark.read.format("iceberg").load(f"{catalog}.{name}")
     path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        st = os.stat(path)
+    except OSError:  # not a local path: no signature to key on
+        return spark.read.parquet(path)
+    sig = (st.st_mtime_ns, st.st_size, st.st_ino)
     handles = _TABLE_HANDLES.setdefault(spark, {})
-    df = handles.get(path)
-    if df is None:
-        df = spark.read.parquet(path)
-        handles[path] = df
-    return df
+    hit = handles.get(path)
+    if hit is None or hit[0] != sig:
+        hit = handles[path] = (sig, spark.read.parquet(path))
+    return hit[1]
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

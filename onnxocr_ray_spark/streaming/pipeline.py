@@ -391,11 +391,12 @@ def neardup_stream(
             )
 
     def sign(batches):
+        memo: dict = {}
         for pdf in batches:
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].values,
-                    "sig": [simhash_int64(simhash_of(t)) for t in pdf["text"]],
+                    "sig": [simhash_int64(simhash_of(t, memo)) for t in pdf["text"]],
                 }
             )
 

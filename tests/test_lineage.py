@@ -86,6 +86,24 @@ def test_rerun_is_noop(spark, outdir):
     assert sorted(os.listdir(f"{outdir}/lineage")) == lineage_files
 
 
+def test_rerun_with_empty_buckets_is_noop(spark, outdir):
+    """More buckets than the input fills: the empty ones are committed as
+    empty, so the rerun returns before building anything."""
+    pages = pages_table(spark, SF0001)
+    first = run_extraction(spark, pages, outdir, n_buckets=1024, snapshot_id="snapA")
+    assert first.processed_buckets == 1024
+    assert first.n_docs == pages.count()
+    empty = read_lineage(spark, outdir).filter(F.col("n_docs") == 0)
+    assert empty.count() > 0
+    assert {r.bucket_checksum for r in empty.collect()} == {hashlib.sha256(b"").hexdigest()}
+    lineage_files = sorted(os.listdir(f"{outdir}/lineage"))
+    again = run_extraction(spark, pages, outdir, n_buckets=1024, snapshot_id="snapA")
+    assert again.processed_buckets == 0
+    assert again.skipped_buckets == 1024
+    assert again.wall_sec == 0.0
+    assert sorted(os.listdir(f"{outdir}/lineage")) == lineage_files
+
+
 def test_new_snapshot_reprocesses(spark, outdir):
     pages = pages_table(spark, SF0001)
     run_extraction(spark, pages, outdir, n_buckets=8, snapshot_id="snapA")

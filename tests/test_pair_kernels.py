@@ -1,14 +1,17 @@
-"""Focused tests for the r6 pair-enumeration arrow kernels.
+"""Focused tests for the blocked-pair kernel (operators/pairs.py) and
+the four queries' scorers.
 
 The oracle-alignment suite pins end-to-end outputs at three SFs; these
-tests pin the two invariants the kernels must hold INDEPENDENTLY of the
+tests pin the invariants the kernel must hold INDEPENDENTLY of the
 synthetic corpus, with inputs crafted to hit them:
 
 - min-band dedup: a pair colliding in SEVERAL LSH bands must be emitted
   exactly once (in its first matching band), with the exact count;
 - triangle tiling: a single hot block must produce exactly its
   m-choose-2 pairs once each across diagonal + cross tiles, whatever
-  hash group each doc lands in.
+  hash group each doc lands in;
+- the dense and the sparse set-overlap paths agree, and a hot block's
+  memory does not grow with m^2.
 """
 
 from __future__ import annotations
@@ -72,10 +75,39 @@ def test_ngram_tile_kernel_counts_hot_block_exactly(spark):
     assert pairs == expect, (len(pairs), len(expect))
 
 
-def test_ngram_counting_paths_agree(spark):
-    """The three counting strategies (BLAS matmul / bincount / chunked
-    sort-unique) must produce identical rows on the same input — the
-    fallbacks are the mega-block 100 TB path and only the caps choose
+def test_null_block_key_pairs_with_nothing(spark):
+    """A NULL block key equals no key, as in the oracle's equi-join: its
+    rows pair with nothing instead of failing the task."""
+    from onnxocr_ray_spark.operators.dedup import _ngram_block_pair_counts
+
+    rows = [
+        (i, lang, 7, 2, sh_v)
+        for i, lang in enumerate(["en", "en", None, None])
+        for sh_v in ("common x", f"own {i}")
+    ]
+    ex = spark.createDataFrame(
+        rows, "doc_id long, lang string, blk int, sz int, sh string"
+    )
+    got = {(r.id_a, r.id_b): (r.s, r.c) for r in _ngram_block_pair_counts(ex).collect()}
+    assert got == {(0, 1): (4, 1)}
+
+
+def _dense_and_sparse(run, monkeypatch):
+    """Rows of ``run()`` with the default cap (dense matmul) and with a
+    cap small enough to force the sparse bincount path through row and
+    column windows; both must agree."""
+    from onnxocr_ray_spark.operators import pairs
+
+    ref = run()
+    assert ref, "degenerate fixture"
+    monkeypatch.setattr(pairs, "PAIR_CAP", 16)
+    assert run() == ref
+    return ref
+
+
+def test_ngram_counting_paths_agree(spark, monkeypatch):
+    """The two counting strategies (BLAS matmul / windowed bincount) must
+    produce identical rows on the same input — only PAIR_CAP chooses
     between them."""
     from onnxocr_ray_spark.operators import dedup
 
@@ -92,16 +124,93 @@ def test_ngram_counting_paths_agree(spark):
         out = dedup._ngram_block_pair_counts(ex).collect()
         return sorted((r.id_a, r.id_b, r.s, r.c) for r in out)
 
-    mm_cap, bin_cap = dedup._NGRAM_MM_CAP, dedup._NGRAM_BIN_CAP
+    _dense_and_sparse(run, monkeypatch)
+
+
+def test_lsh_counting_paths_agree(spark, monkeypatch):
+    """Same for the LSH bucket kernel, min-band rule included: docs share
+    buckets in several bands and shingles across buckets."""
+    from onnxocr_ray_spark.operators import dedup
+
+    rows = [
+        (i, ["common x", f"own {i}"] + (["semi y"] if i % 3 == 0 else []),
+         [f"h{i % 2}", f"g{i % 3}", "k", f"z{i}"])
+        for i in range(30)
+    ]
+    sh = spark.createDataFrame(
+        rows, "doc_id long, shingles array<string>, bands array<string>"
+    )
+    ex = sh.select(
+        "doc_id", "shingles", "bands",
+        F.posexplode("bands").alias("band_idx", "band_hash"),
+    )
+
+    def run():
+        out = dedup._lsh_bucket_pair_counts(ex).collect()
+        return sorted((r.id_a, r.id_b, r.sz_a, r.sz_b, r.c) for r in out)
+
+    got = _dense_and_sparse(run, monkeypatch)
+    # every pair of the 30 docs shares band 2 ("k"), so each comes out once
+    assert [r[:2] for r in got] == [(a, b) for a in range(30) for b in range(a + 1, 30)]
+
+
+def _one_block_batch(m):
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_pydict({
+        "doc_id": pa.array(range(m), pa.int64()),
+        "shingles": pa.array([["common x", f"own {i}"] for i in range(m)]),
+        "bands": pa.array([["h"] * 4] * m),
+        "band_idx": pa.array([0] * m, pa.int32()),
+        "band_hash": pa.array(["h"] * m),
+    })
+
+
+def _drain_one_block(m):
+    """Driver-side run of the LSH partition function on m docs sharing
+    one bucket and one shingle: (pairs, largest batch, tracemalloc
+    peak)."""
+    import tracemalloc
+
+    from pyspark.sql import types as T
+
+    from onnxocr_ray_spark.operators import dedup, pairs
+
+    schema = T.StructType(
+        [T.StructField(c, T.LongType()) for c in ("id_a", "id_b")]
+        + [T.StructField(c, T.IntegerType()) for c in ("sz_a", "sz_b")]
+        + [T.StructField("c", T.LongType())]
+    )
+    gen = pairs.pair_kernel(
+        schema, ["band_idx", "band_hash"], dedup._LSH_SCORER, min_band=dedup._lsh_bands
+    )
+    batch = _one_block_batch(m)
+    total = largest = 0
+    tracemalloc.start()
     try:
-        ref = run()                       # matmul path
-        assert ref, "degenerate fixture"
-        dedup._NGRAM_MM_CAP = 0           # force bincount path
-        assert run() == ref
-        dedup._NGRAM_BIN_CAP = 0          # force chunked sort-unique path
-        assert run() == ref
+        for out in gen(iter([batch])):
+            total += out.num_rows
+            largest = max(largest, out.num_rows)
+            del out
+        peak = tracemalloc.get_traced_memory()[1]
     finally:
-        dedup._NGRAM_MM_CAP, dedup._NGRAM_BIN_CAP = mm_cap, bin_cap
+        tracemalloc.stop()
+    return total, largest, peak
+
+
+def test_hot_block_memory_is_bounded(monkeypatch):
+    """One hot bucket of m docs: every pair comes out, in batches of at
+    most OUT_ROWS, and peak memory does not grow with m^2 (a dense Gram
+    matrix would quadruple it from m=4000 to m=8000)."""
+    from onnxocr_ray_spark.operators import pairs
+
+    monkeypatch.setattr(pairs, "PAIR_CAP", 1 << 16)
+    peaks = {}
+    for m in (4000, 8000):
+        total, largest, peaks[m] = _drain_one_block(m)
+        assert total == m * (m - 1) // 2
+        assert largest <= pairs.OUT_ROWS
+    assert peaks[8000] <= 1.5 * peaks[4000], peaks
 
 
 def test_cluster_cos_kernel_matches_interpreted_cosine(spark):

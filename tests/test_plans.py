@@ -205,8 +205,10 @@ def test_embed_cosine_joins_on_lsh_bucket(spark, queries):
     assert "CartesianProduct" not in plan
     assert "hashpartitioning(cid" in plan, plan
     assert "MapInArrow" in plan, plan
-    # the only broadcast is the tiny label attach on the result rows
+    # the label rides out of the kernel inside cid: no join at all, in
+    # particular no broadcast of a corpus-sized label table
     assert "SortMergeJoin" not in plan
+    assert "BroadcastHashJoin" not in plan, plan
 
 
 def test_simhash_pairs_uses_banded_equijoin(spark, queries):

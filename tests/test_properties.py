@@ -132,6 +132,32 @@ def test_py_shingles_match_duckdb_on_arbitrary_text(texts):
         assert _py_shingles(t) == sh.get(i, []), (i, repr(t))
 
 
+# Greek and Turkish case pairs (final sigma, dotted and dotless I), a
+# Cyrillic pair, and the space the mirrors split on
+_CASE_ALPHABET = "ΑαΒβΔδΟοΣσςΆάΪϊΐİiIıŞşĞğДдЯя "
+
+
+@given(st.lists(st.text(alphabet=_CASE_ALPHABET, max_size=16), min_size=1, max_size=8))
+@settings(max_examples=25, deadline=None)
+def test_python_lower_mirrors_match_spark_lower(spark, texts):
+    """The Python mirrors of lower(trim(text, ' ')) in _py_shingles and
+    simhash_of agree with Spark's lower() on non-Latin case pairs, final
+    sigma and İ included (DuckDB's lower() does not: see _SH_SQL)."""
+    from pyspark.sql import functions as F
+
+    from onnxocr_ray_spark.operators.dedup import _py_shingles, _shingles_expr, simhash_of
+
+    texts = texts + ["ΟΔΟΣ ΟΔΟΣ", "İSTANBUL İzmir ΣΑΣ"]
+    jvm = (
+        spark.createDataFrame([(t,) for t in texts], "text string")
+        .select(F.lower(F.trim("text")), _shingles_expr(F.col("text")))
+        .collect()
+    )
+    for t, (low, shingles) in zip(texts, jvm):
+        assert _py_shingles(t) == shingles, (repr(t), repr(low))
+        assert simhash_of(t) == simhash_of(low), (repr(t), repr(low))
+
+
 # --- round-5 container formats: synthesis/parse roundtrip fuzz ---
 
 @given(st.integers(0, 2**31 - 1), st.text(max_size=4000))

@@ -75,3 +75,20 @@ def test_iceberg_gate_and_parquet_fallback(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CATALOG", "prod_catalog.crawl")
     df = load_table(spark, SF0001, "documents")
     assert df.count() > 0  # parquet fallback served the read
+
+
+def test_load_table_sees_a_rewritten_table(spark, tmp_path):
+    """A table rewritten in the session is read as rewritten, not through
+    the memoized handle's old file listing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from onnxocr_ray_spark.sources.tables import load_table
+
+    table = tmp_path / "documents.parquet"
+    table.mkdir()
+    pq.write_table(pa.table({"doc_id": [1, 2, 3]}), str(table / "part-0.parquet"))
+    assert sorted(r.doc_id for r in load_table(spark, str(tmp_path), "documents").collect()) == [1, 2, 3]
+    pq.write_table(pa.table({"doc_id": list(range(10, 20))}), str(table / "part-1.parquet"))
+    got = sorted(r.doc_id for r in load_table(spark, str(tmp_path), "documents").collect())
+    assert got == [1, 2, 3] + list(range(10, 20))
