@@ -125,9 +125,9 @@ def main() -> None:
     for pass_i in range(MAX_PASSES):
         for name in HEADLINE:
             q = queries[name]
-            # time build + execute together: extract() materializes its
-            # routed pass eagerly at build time on exact-shape tables, so
-            # timing only the final action would under-report it
+            # time build + execute together: a query may run jobs at
+            # build time (extract()'s straggler probe), so timing only
+            # the final action would under-report it
             t0 = time.perf_counter()
             df = q.fn(spark, sf_dir)
             materialize(df)

@@ -128,10 +128,9 @@ def run_level(cpus: int) -> dict:
     times = []
     reps = HIGH_REPS if cpus == HIGH else REPS
     for _ in range(reps):
-        # rebuild the plan per rep AND time the build: extract() persists
-        # and eagerly materializes its routed pass on exact-shape tables,
-        # so a reused DataFrame (or a timer started after extract()) would
-        # not measure the extraction work at all
+        # rebuild the plan per rep AND time the build: extract() runs its
+        # straggler probe job at build time, so a timer started after
+        # extract() would not measure it
         t0 = time.perf_counter()
         out = extract(pages)
         out.write.mode("overwrite").format("noop").save()

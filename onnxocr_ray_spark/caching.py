@@ -1,17 +1,16 @@
 """Bounded persist lifecycle for a long-lived session.
 
-Several operators materialize an intermediate once and reuse it across
-join branches (LSH signature tables, the routed extraction pass). A bare
+An operator may materialize an intermediate once and reuse it across
+join branches (the bigram table of the text statistics). A bare
 ``.persist()`` with no owner leaks in a long-lived session: the driver
 runs all ~59 registry queries through ONE SparkSession, so unbounded
 caches accumulate until executor storage memory is exhausted.
 
 The contract here: ``scoped_persist`` registers every persisted handle,
 and ``release_persisted`` (called automatically at the start of every
-registry query by ``registry.register``, and by ``extract()`` for its
-previous run's handle) unpersists everything registered earlier. Queries
-run sequentially through the driver/bench, so at any moment at most one
-query's caches are live.
+registry query by ``registry.register``) unpersists everything
+registered earlier. Queries run sequentially through the driver/bench,
+so at any moment at most one query's caches are live.
 """
 
 from __future__ import annotations

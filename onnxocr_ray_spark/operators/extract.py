@@ -17,10 +17,10 @@ architecture is Spark-first, not a translation:
   fused fast path (``extract_fused``: ALL three stages in one
   mapInPandas — zero shuffles, one Arrow crossing) into detect ->
   span-explode -> recognize -> regroup so one giant page cannot straggle
-  a task. Routing strategy depends on the input: an ingest-materialized
-  ``html_size`` column gives a metadata-scale probe (clean corpora run
-  the pure fused plan); exact-shape tables use single-pass per-row
-  routing over a persisted kernel output (html read exactly once). The
+  a task. Routing is by the ``html_size`` column (derived as
+  ``octet_length(html)`` when the input lacks it): one probe job counts
+  stragglers, a clean corpus runs the pure fused plan, and otherwise
+  size-filtered legs split small from big documents. The
   stage-separated forms (``detect``, ``classify_recognize_grouped``,
   ``classify_recognize_exploded``) remain public — they are the
   /detection /classification /recognition endpoint analogs. All paths
@@ -149,7 +149,7 @@ def _chunk_frames(pdf: pd.DataFrame, sizes: pd.Series, budget: int) -> Iterator[
 
 # --- Arrow hot-path plumbing (mapInArrow) ---------------------------------
 #
-# The fused/routed kernels are the 100-TB hot path, and at high
+# The fused kernel is the 100-TB hot path, and at high
 # parallelism the binding resource is MEMORY BANDWIDTH, not CPU (the
 # pinned scaling series shows the per-core rate at 8 cores capped well
 # below the bare-kernel rate while 2 cores run at the kernel floor —
@@ -360,8 +360,7 @@ _SPAN_UDF_T = T.StructType(
 )
 
 
-def classify_recognize_exploded(detected: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
-                                span_partitions: Optional[int] = None) -> DataFrame:
+def classify_recognize_exploded(detected: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
     """Straggler path (SURVEY.md §4.3.3): explode spans of heavy documents,
     classify+recognize at span granularity across the cluster, regroup.
 
@@ -369,25 +368,21 @@ def classify_recognize_exploded(detected: DataFrame, cfg: ExtractConfig = DEFAUL
     rec_width) was fixed at detect time over the whole document — span
     placement can no longer change what any kernel computes.
     """
-    # zero-region documents (empty/undecodable payloads) are routed around
-    # the explode+UDF entirely so they don't vanish from the output; the
-    # split happens BEFORE the Generate so the explode runs once, not once
-    # per branch
-    has_spans = F.size("spans") > 0
-    empty_docs = detected.filter(~has_spans | F.col("spans").isNull()).select(
-        "url", F.from_json(F.lit("[]"), T.ArrayType(REC_SPAN_T)).alias("spans")
-    )
-    spans = detected.filter(has_spans).select(
-        "url", F.posexplode("spans").alias("ord", "s")
-    )
-    if span_partitions:
-        spans = spans.repartition(span_partitions, "url", "ord")
+    # posexplode_outer keeps zero-region documents (empty/undecodable
+    # payloads) as one row with a NULL span, so ``detected`` is consumed
+    # by ONE branch and its kernel runs once per document
+    spans = detected.select("url", F.posexplode_outer("spans").alias("ord", "s"))
 
     @F.pandas_udf(_SPAN_UDF_T)
     def span_udf(raw: pd.Series, rec_width: pd.Series) -> pd.DataFrame:
         # whole Arrow batch through one provider/stand-in call — provider
-        # mode chunks internally, so straggler spans batch across docs
-        rows = _process_doc_spans(list(raw), [int(w) for w in rec_width], cfg)
+        # mode chunks internally, so straggler spans batch across docs;
+        # the NULL span of a zero-region document is skipped
+        real = raw.notna()
+        results = iter(
+            _process_doc_spans(list(raw[real]), [int(w) for w in rec_width[real]], cfg)
+        )
+        rows = [next(results) if r else (None,) * 4 for r in real]
         return pd.DataFrame(rows, columns=["angle", "cls_conf", "text", "score"])
 
     done = spans.withColumn("r", span_udf(F.col("s.raw"), F.col("s.rec_width")))
@@ -402,14 +397,15 @@ def classify_recognize_exploded(detected: DataFrame, cfg: ExtractConfig = DEFAUL
         F.col("s.rec_width").alias("rec_width"),
     )
     # regroup: collect spans with their reading-order index, then restore
-    # order JVM-side (sort_array on (ord, span) structs sorts by ord first)
-    regrouped = (
-        done.select("url", F.struct(F.col("ord"), span_struct.alias("s")).alias("os"))
+    # order JVM-side (sort_array on (ord, span) structs sorts by ord first);
+    # collect_list drops the NULL of a zero-region document, leaving []
+    ordered = F.when(F.col("ord").isNotNull(), F.struct(F.col("ord"), span_struct.alias("s")))
+    return (
+        done.select("url", ordered.alias("os"))
         .groupBy("url")
         .agg(F.sort_array(F.collect_list("os")).alias("oss"))
         .select("url", F.expr("transform(oss, x -> x.s)").alias("spans"))
     )
-    return regrouped.unionByName(empty_docs)
 
 
 def assemble(recognized: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
@@ -490,282 +486,89 @@ def extract_fused(pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> Data
     return pages.select("url", "html").mapInArrow(gen, schema=REC_DOC_SCHEMA)
 
 
-ROUTED_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("spans", T.ArrayType(REC_SPAN_T)),       # small docs
-        T.StructField("det_spans", T.ArrayType(DET_SPAN_T)),   # big docs
-        T.StructField("is_big", T.BooleanType(), False),
-    ]
-)
-
-# Spill dirs of recent extract() calls' routed passes. Deletion is
-# DEFERRED: a prior extract() result is a lazy DataFrame over its spill,
-# so deleting it at the next call would invalidate a still-referenced
-# plan (ADVICE r4). We keep the _SPILL_KEEP most recent dirs (older ones
-# are presumed consumed — streaming epochs and bench loops execute each
-# result before building the next) and remove everything at interpreter
-# exit.
-_PREV_SPILL_DIRS: List[str] = []
-_SPILL_KEEP = 4
-
-
-def _cleanup_spill_dirs(keep: int = 0) -> None:
-    import shutil
-
-    while len(_PREV_SPILL_DIRS) > keep:
-        shutil.rmtree(_PREV_SPILL_DIRS.pop(0), ignore_errors=True)
-
-
-def _spill_root(spark) -> Optional[str]:
-    """Where the routed pass may spill, or None when it must persist().
-
-    The spill is written by EXECUTORS and re-read by executors, so the
-    location must be visible to all of them:
-
-    - ``spark.onnxocr_ray_spark.scratch_dir`` (session conf), when set —
-      a shared filesystem path (e.g. under the job output root) for
-      multi-node clusters;
-    - the driver tempdir on ``local[*]`` masters, where driver and
-      executors share one machine;
-    - otherwise None: a non-local master with no shared scratch
-      configured falls back to the cluster-safe persist() strategy.
-    """
-    conf_dir = spark.conf.get("spark.onnxocr_ray_spark.scratch_dir", "")
-    if conf_dir:
-        return conf_dir
-    if spark.conf.get("spark.master", "").startswith("local"):
-        import tempfile
-
-        return tempfile.gettempdir()
-    return None
-
-
-def _new_spill_dir(root: str) -> str:
-    import atexit
-    import uuid
-
-    if not _PREV_SPILL_DIRS:
-        atexit.register(_cleanup_spill_dirs)
-    else:
-        _cleanup_spill_dirs(keep=_SPILL_KEEP - 1)
-    d = f"{root.rstrip('/')}/onnxocr_routed_spill_{uuid.uuid4().hex}"
-    _PREV_SPILL_DIRS.append(d)
-    return d
-
-
-def extract_routed(pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
-                   straggler_html_bytes: int = 1 << 20) -> DataFrame:
-    """ONE pass over the pages scan with per-row straggler routing.
-
-    Typical documents (html <= threshold) are processed through all three
-    stages fused (zero extra crossings); heavy-tail documents get detect
-    ONLY — their per-span work is exported for cluster-wide distribution.
-    This replaces the round-1 eager ``filter(is_big).limit(1).count()``
-    probe, which could not short-circuit when NO straggler existed and so
-    re-read every partition's html column (a full extra pass over the
-    fattest column at 100 TB) just to elide ~1 s of empty-branch overhead.
-
-    mapInArrow for the same bandwidth reason as extract_fused: the big/
-    small decision needs only the Arrow offsets (payload byte size), and
-    the payload decodes once, straight from the buffer.
-    """
-    out_schema = _arrow_out_schema(ROUTED_SCHEMA)
-    rec_t = out_schema.field("spans").type
-    det_t = out_schema.field("det_spans").type
-
-    def gen(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for rb in batches:
-            url = _arrow_col(rb, "url")
-            offs, mv, nulls = _binary_view(_arrow_col(rb, "html"))
-            sizes = np.diff(offs)
-            for lo, hi in _chunk_bounds(sizes, cfg.coalesce_target_bytes):
-                rec_out, det_out, big_out = [], [], []
-                for i in range(lo, hi):
-                    if nulls is not None and nulls[i]:
-                        src = None
-                    else:
-                        src = _decode_mv(mv, offs[i], offs[i + 1])
-                    # routing key = raw payload BYTE size (as with the
-                    # pandas form: len(data)), independent of decodability
-                    is_null = nulls is not None and nulls[i]
-                    if not is_null and int(sizes[i]) > straggler_html_bytes:
-                        det_out.append(_detect_doc_src(src, cfg))
-                        rec_out.append(None)
-                        big_out.append(True)
-                        continue
-                    rec_out.append(_rec_doc(_detect_doc_src(src, cfg), cfg))
-                    det_out.append(None)
-                    big_out.append(False)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        url.slice(lo, hi - lo),
-                        pa.array(rec_out, type=rec_t),
-                        pa.array(det_out, type=det_t),
-                        pa.array(big_out, type=pa.bool_()),
-                    ],
-                    schema=out_schema,
-                )
-
-    return pages.select("url", "html").mapInArrow(gen, schema=ROUTED_SCHEMA)
-
-
 SIZE_COL = "html_size"
 
 
 def extract(pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
             doc_partitions: Optional[int] = None,
-            span_partitions: Optional[int] = None,
             straggler_html_bytes: int = 1 << 20) -> DataFrame:
-    """Full pipeline with straggler routing. Two strategies, picked by
-    what the input table offers:
+    """Full pipeline with straggler routing: a metadata-scale probe plus
+    size-filtered branches.
 
     pages(url, html, ...) -> (url, spans, extracted_text, n_spans, checksum)
 
-    1. **Sized tables** (an ``html_size`` column materialized at ingest —
-       every WARC record carries its length, and an Iceberg ingest
-       keeps it as a stats column) — the PRODUCTION DEFAULT: the
-       synthesized ingest (``sources/pages.py``) always materializes
-       the stat, so this zero-cache strategy is what runs everywhere
-       except truly schema-less inputs. One probe job scans ONLY that
-       8-byte column (counting stragglers and NULL stats together); on
-       a clean corpus slice the plan collapses to the pure zero-overhead
-       fused pass — no cache, no extra stages, one scan of html.
-       When stragglers exist, the branches carry pushed ``html_size``
-       filters; only row groups mixing both classes are read twice.
-       Rows whose size stat is NULL take the per-row routed leg, so a
-       huge doc with a missing ingest stat keeps straggler protection.
-    2. **Exact-shape tables** (no size column): single-pass per-row
-       routing — ``extract_routed`` decides inside the fused kernel, the
-       OUTPUT-SIZED result is spilled once to temp parquet on a shared
-       scratch location (or persisted MEMORY_AND_DISK on non-local
-       masters with no shared scratch configured — see _spill_root), and
-       both branch consumers scan that materialization. The html column
-       is still read exactly once, but the spill footprint is why sized
-       tables are preferred at 100 TB.
+    The routing key is the ``html_size`` column: every WARC record
+    carries its length, the synthesized ingest (``sources/pages.py``)
+    materializes it, and an Iceberg ingest keeps it as a stats column.
+    An input without it (``read_warc``, ``read_html_dir``, CLI parquet)
+    derives it as ``octet_length(html)``. One probe job counts
+    stragglers and NULL stats together; on a sized table it reads only
+    that 8-byte column. A clean corpus slice then runs the pure fused
+    pass: no cache, no extra stages, one scan of html. Otherwise two
+    filtered legs run: ``extract_fused`` for small docs, and
+    ``detect`` -> ``classify_recognize_exploded`` for big ones, whose
+    spans explode across the cluster so one giant page cannot straggle a
+    task. The branches carry pushed ``html_size`` filters, so only row
+    groups mixing both classes are read twice. A row whose stat is NULL
+    is routed by ``octet_length(html)`` inside the same two filters, so
+    a huge doc with a missing stat keeps straggler protection; a NULL
+    html takes the small leg.
 
-    Straggler spans explode across the cluster so one giant page cannot
-    straggle a task. All paths run identical kernels with identical
-    inputs — byte-identity is proven by tests regardless of which path
-    a document takes.
+    The probe reads ``pages`` as given; an under-partitioned input is
+    then spread by url for the extraction itself (``doc_partitions``,
+    default ``defaultParallelism``). Building the plan runs only the
+    probe and writes no files. All legs run identical kernels with
+    identical inputs; tests prove byte-identity whichever leg a
+    document takes.
     """
+    spread = pages
     if doc_partitions is None and pages.rdd.getNumPartitions() < (
         pages.sparkSession.sparkContext.defaultParallelism
     ):
         # under-partitioned input (single parquet file, small table):
         # without this the whole narrow detect chain runs on one core
         doc_partitions = pages.sparkSession.sparkContext.defaultParallelism
-    if doc_partitions:
+    if doc_partitions is not None:
         # uniform doc distribution; url hash is effectively a salt because
         # input files may be ordered by crawl host (skewed localities)
-        pages = pages.repartition(doc_partitions, "url")
-
-    if SIZE_COL in pages.columns:
-        return _extract_sized(pages, cfg, span_partitions, straggler_html_bytes)
-    return assemble(
-        _routed_spans(pages, cfg, span_partitions, straggler_html_bytes), cfg
-    )
+        spread = pages.repartition(doc_partitions, "url")
+    return _extract_spread(pages, spread, cfg, straggler_html_bytes)
 
 
-def _routed_spans(pages: DataFrame, cfg: ExtractConfig,
-                  span_partitions: Optional[int],
-                  straggler_html_bytes: int) -> DataFrame:
-    """Exact-shape strategy body: per-row routed pass (spilled once) +
-    the small/big branch consumers, returning the pre-assemble
-    ``(url, spans)`` union. Also used by the sized strategy for rows
-    whose ``html_size`` stat is NULL (unknown size -> per-row decision
-    keeps straggler protection)."""
-    # The routed pass is materialized EXACTLY ONCE by writing it to a
-    # temp parquet table, then both branch consumers scan that table.
-    # Two reasons this is a spill, not a persist:
-    #  - eager materialization kills the branch race (the small/big legs
-    #    are sibling tasks of ONE stage and at high parallelism raced on
-    #    the same uncached partitions — measured as the kernel executing
-    #    twice: local[8] ran 200k docs at 6.6k docs/s vs 9.6k at half
-    #    the corpus);
-    #  - at 100 TB an output-sized MEMORY_AND_DISK cache of a schema-less
-    #    input would evict real working set; parquet on a scratch dir is
-    #    bounded and the is_big branch filters push down to the rescan.
-    #    Sized tables (an html_size ingest stat) remain the production
-    #    default and need neither cache nor spill.
-    # The spill location must be shared between executors (_spill_root);
-    # a non-local master without a configured shared scratch dir gets the
-    # cluster-safe persist() + eager count() instead.
-    spark = pages.sparkSession
-    routed_src = extract_routed(pages, cfg, straggler_html_bytes)
-    root = _spill_root(spark)
-    if root is None:
-        from pyspark import StorageLevel
+def _extract_spread(probed: DataFrame, pages: DataFrame, cfg: ExtractConfig,
+                    straggler_html_bytes: int = 1 << 20) -> DataFrame:
+    """``extract`` of ``pages``, an already-spread form of ``probed``.
 
-        routed = routed_src.persist(StorageLevel.MEMORY_AND_DISK)
-        routed.count()  # eager: kills the sibling-branch recompute race
-    else:
-        spill_dir = _new_spill_dir(root)
-        routed_src.write.parquet(spill_dir, mode="overwrite")
-        routed = spark.read.parquet(spill_dir)
-
-    rec_small = routed.filter(~F.col("is_big")).select("url", "spans")
-    # The straggler branch handles the heavy TAIL — few documents by
-    # definition. Coalesce it to a handful of partitions before the
-    # span-level pandas_udf: every chained Python stage pays a worker
-    # round-trip per partition even when the partition is near-empty;
-    # classify_recognize_exploded then redistributes SPANS via
-    # span_partitions when a finer fan-out is wanted.
-    parallelism = pages.sparkSession.sparkContext.defaultParallelism
-    big = (
-        routed.filter(F.col("is_big"))
-        .select("url", F.col("det_spans").alias("spans"))
-        .repartition(max(4, parallelism // 4), "url")
-    )
-    rec_big = classify_recognize_exploded(big, cfg, span_partitions=span_partitions)
-    return rec_small.unionByName(rec_big)
-
-
-def _extract_sized(pages: DataFrame, cfg: ExtractConfig,
-                   span_partitions: Optional[int],
-                   straggler_html_bytes: int) -> DataFrame:
-    """Sized-table strategy: metadata-scale probe + size-filtered branches.
-
-    The probe reads ONLY the ingest-materialized ``html_size`` column
-    (parquet row-group stats prune groups whose max size is under the
-    threshold), never the html bytes — fixing the round-1 flaw where the
-    elision probe re-read the fattest column of the whole corpus."""
-    is_big = F.col(SIZE_COL) > straggler_html_bytes
-    # ONE metadata-scale probe job for both facts (straggler present?
-    # size stat ever NULL?): scans only the 8-byte size column
-    stats = pages.select(
-        F.sum(is_big.cast("long")).alias("n_big"),
-        F.sum(F.col(SIZE_COL).isNull().cast("long")).alias("n_null"),
+    The probe runs over ``probed`` so that it never re-runs the shuffle
+    that spread ``pages``."""
+    if SIZE_COL not in probed.columns:
+        probed = probed.withColumn(SIZE_COL, F.octet_length("html"))
+        pages = pages.withColumn(SIZE_COL, F.octet_length("html"))
+    size = F.col(SIZE_COL)
+    # ONE probe job for both facts (straggler present? size stat ever
+    # NULL?); on a sized table it scans only the 8-byte size column
+    stats = probed.select(
+        F.sum((size > straggler_html_bytes).cast("long")).alias("n_big"),
+        F.sum(size.isNull().cast("long")).alias("n_null"),
     ).first()
-    n_big, n_null = stats["n_big"] or 0, stats["n_null"] or 0
-    if n_big == 0 and n_null == 0:
+    if not stats["n_big"] and not stats["n_null"]:
         # clean corpus slice: the plan IS the fused zero-shuffle pass
         return assemble(extract_fused(pages.select("url", "html"), cfg), cfg)
-    legs = []
-    if n_null:
-        # rows with a missing ingest stat: unknown size -> per-row routed
-        # decision, so a huge doc with no stat keeps straggler protection
-        legs.append(
-            _routed_spans(
-                pages.filter(F.col(SIZE_COL).isNull()),
-                cfg, span_partitions, straggler_html_bytes,
-            )
-        )
-    sized = pages.filter(F.col(SIZE_COL).isNotNull())
-    small = sized.filter(~is_big).select("url", "html")
-    legs.append(extract_fused(small, cfg))
-    if n_big:
-        parallelism = pages.sparkSession.sparkContext.defaultParallelism
-        big_pages = (
-            sized.filter(is_big)
-            .select("url", "html")
-            .repartition(max(4, parallelism // 4), "url")
-        )
-        big = detect(big_pages, cfg).drop("n_regions")
-        legs.append(
-            classify_recognize_exploded(big, cfg, span_partitions=span_partitions)
-        )
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return assemble(out, cfg)
+    # the first conjunct of each filter is pushed to the scan and prunes
+    # row groups by their html_size stats; the second routes a NULL stat
+    # by the payload's own byte size
+    known = size.isNotNull()
+    own_big = F.coalesce(F.octet_length("html") > straggler_html_bytes, F.lit(False))
+    small = pages.filter(
+        ((size <= straggler_html_bytes) | ~known) & (known | ~own_big)
+    ).select("url", "html")
+    # stragglers are few by definition: a handful of partitions spares the
+    # chained Python stages a worker round-trip per near-empty partition
+    parallelism = pages.sparkSession.sparkContext.defaultParallelism
+    big = (
+        pages.filter(((size > straggler_html_bytes) | ~known) & (known | own_big))
+        .select("url", "html")
+        .repartition(max(4, parallelism // 4), "url")
+    )
+    rec_big = classify_recognize_exploded(detect(big, cfg).drop("n_regions"), cfg)
+    return assemble(extract_fused(small, cfg).unionByName(rec_big), cfg)

@@ -61,7 +61,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from onnxocr_ray_spark.config import DEFAULT_CONFIG, ExtractConfig
-from onnxocr_ray_spark.operators.extract import extract
+from onnxocr_ray_spark.operators.extract import _extract_spread
 
 LINEAGE_SCHEMA = (
     "snapshot_id string, run_id string, wp int, n_docs long, n_spans long,"
@@ -205,11 +205,11 @@ def run_extraction(
     t0 = time.perf_counter()
     todo = pages.withColumn("wp", _bucket(n_buckets)).filter(F.col("wp").isin(todo_wps))
     aligned = align_to_buckets(todo, spark.sparkContext.defaultParallelism)
-    # doc_partitions=0: the input is already spread, so extract neither
-    # reshuffles it nor asks for its partition count (an RDD job on a
-    # shuffled frame). wp is a pure function of url — recompute it after
-    # extraction instead of carrying it through the kernels.
-    extracted = extract(aligned, cfg, doc_partitions=0).withColumn("wp", _bucket(n_buckets))
+    # aligned is already spread, so extract neither reshuffles it nor asks
+    # for its partition count, and probes todo so that the probe does not
+    # run the range shuffle too. wp is a pure function of url — recompute
+    # it after extraction instead of carrying it through the kernels.
+    extracted = _extract_spread(todo, aligned, cfg).withColumn("wp", _bucket(n_buckets))
     (
         extracted.select("url", "spans", "extracted_text", "n_spans", "checksum", "wp")
         .write.mode("overwrite")

@@ -12,7 +12,7 @@ from onnxocr_ray_spark.registry import load_all
 
 from tests.conftest import SF001
 
-# the dedup + extract slice of the registry: LSH signatures, routed
+# the dedup + extract slice of the registry: LSH signatures, probed
 # extract, simhash bands, CC canonical window, ngram shingle table
 NAMES = [
     "dedup_minhash_lsh",

@@ -1,6 +1,6 @@
 """Arrow hot-path plumbing (operators/extract.py mapInArrow helpers).
 
-The fused/routed stages decode html straight from Arrow buffers
+The fused stage decodes html straight from Arrow buffers
 (_binary_view + _decode_mv) instead of materializing per-row bytes via
 pandas; these tests pin that plumbing to the reference-semantics
 ``decode_html`` (kernels/html.py:42) and to the pandas-era chunker cut

@@ -28,8 +28,8 @@ def _collect_spark(spark, cfg, doc_partitions=None, straggler_html_bytes=256 << 
                    exact_shape=False):
     pages = pages_from_documents(spark, SF0001)
     if exact_shape:
-        # the north-rule 5-column table (no ingest size column): exercises
-        # the single-pass per-row routed strategy instead of the sized one
+        # the north-rule 5-column table (no ingest size column): extract()
+        # derives html_size as octet_length(html)
         pages = pages.drop("html_size")
     out = extract(
         pages, cfg,
@@ -74,8 +74,8 @@ def test_parity_all_docs_through_straggler_path(spark, oracle_results):
 
 
 def test_parity_exact_shape_routed_path(spark, oracle_results):
-    """No html_size column: the per-row routed strategy (persisted single
-    pass) must be byte-identical to the sized strategy and the oracle."""
+    """No html_size column: routing on the derived octet_length(html)
+    must be byte-identical to the sized table and the oracle."""
     _assert_parity(
         _collect_spark(spark, DEFAULT_CONFIG, exact_shape=True), oracle_results
     )

@@ -73,6 +73,39 @@ def distinct_parquet_scans(df) -> int:
     return len(set(re.findall(r"Scan parquet\s*\((\d+)\)", s)))
 
 
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted through a job group."""
+    import uuid
+
+    gid = f"plan-test-{uuid.uuid4().hex}"
+    sc = spark.sparkContext
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _build_runs_only_the_probe(spark, pages, monkeypatch, tmp_path, **kw):
+    """``extract(pages, **kw)``, asserting that its build writes no file
+    under the temp dir and runs exactly the jobs of its one probe."""
+    import tempfile
+
+    threshold = kw.get("straggler_html_bytes", 1 << 20)
+    size = F.col("html_size") if "html_size" in pages.columns else F.octet_length("html")
+    probe = pages.select(
+        F.sum((size > threshold).cast("long")), F.sum(size.isNull().cast("long"))
+    )
+    _, n_probe = _jobs(spark, probe.first)
+    with monkeypatch.context() as m:
+        m.setattr(tempfile, "tempdir", str(tmp_path))
+        df, n_build = _jobs(spark, lambda: extract(pages, **kw))
+    assert n_build == n_probe, (n_build, n_probe)
+    assert list(tmp_path.iterdir()) == []
+    return df
+
+
 def test_sized_clean_corpus_is_pure_fused_plan(spark, queries):
     # sized table + no straggler: the metadata probe elides the straggler
     # machinery entirely — one parquet scan, no cache, no exchanges
@@ -101,18 +134,17 @@ def test_sized_probe_reads_only_size_column(spark, queries):
     assert names == {"html_size"}, names
 
 
-def test_sized_null_stat_rows_keep_straggler_protection(spark, queries):
-    # a NULL html_size means "unknown" — those rows must take the per-row
-    # routed leg (InMemoryTableScan present), not be silently fused
+def test_sized_null_stat_rows_keep_straggler_protection(spark, queries, monkeypatch, tmp_path):
+    # a NULL html_size means "unknown" — those rows are routed by their
+    # own byte size inside the two size-filtered legs, not silently fused
     pages = pages_table(spark, SF0001).withColumn(
         "html_size",
         F.when(F.col("url").substr(-1, 1) == "0", F.lit(None).cast("long"))
         .otherwise(F.col("html_size")),
     )
-    df = extract(pages, straggler_html_bytes=0)
+    df = _build_runs_only_the_probe(spark, pages, monkeypatch, tmp_path,
+                                    straggler_html_bytes=0)
     plan = plan_of(df)
-    # routed leg for null rows reads its spilled pass, never a cache
-    assert "onnxocr_routed_spill_" in plan, plan
     assert "InMemoryTableScan" not in plan, plan
     assert "Generate" in plan                  # straggler explode active
     # byte-identity: same rows as the clean sized path
@@ -142,29 +174,93 @@ def test_synthesized_ingest_takes_sized_zero_cache_plan(spark, queries):
     assert "InMemoryTableScan" not in plan_of(df)
 
 
-def test_exact_shape_reads_html_exactly_once(spark, queries):
-    # per-row routed strategy (no size column): the pages parquet is
-    # scanned ONCE, by the spill job that ran eagerly inside extract();
-    # the returned plan only scans the spilled routed pass — the html
-    # source appears in NO scan, and (VERDICT r3 item 5) there is no
-    # output-sized InMemoryTableScan cache anywhere
-    df = extract(pages_table(spark, SF0001).drop("html_size"))
+def test_exact_shape_reads_html_exactly_once(spark, queries, monkeypatch, tmp_path):
+    # no size column: extract() derives it as octet_length(html), and its
+    # one probe is the only job at build time; a clean corpus then plans
+    # the pure fused pass — one scan of html, no output-sized
+    # InMemoryTableScan cache (VERDICT r3 item 5), no spill
+    df = _build_runs_only_the_probe(
+        spark, pages_table(spark, SF0001).drop("html_size"), monkeypatch, tmp_path
+    )
     plan = plan_of(df)
     assert "InMemoryTableScan" not in plan, plan
-    assert "onnxocr_routed_spill_" in plan, plan
-    scan_locs = [l for l in plan.splitlines() if "Location:" in l]
-    assert scan_locs and all("onnxocr_routed_spill_" in l for l in scan_locs), plan
+    assert distinct_parquet_scans(df) == 1
+    assert "Exchange" not in plan, plan
 
 
-def test_exact_shape_single_scan_even_when_all_docs_are_stragglers(spark, queries):
-    df = extract(
-        pages_table(spark, SF0001).drop("html_size"), straggler_html_bytes=0
+def test_exact_shape_single_scan_even_when_all_docs_are_stragglers(spark, queries, monkeypatch, tmp_path):
+    # unsized input at threshold 0: both size-filtered legs read the
+    # source itself, with no cache and no spill in between
+    df = _build_runs_only_the_probe(
+        spark, pages_table(spark, SF0001).drop("html_size"), monkeypatch, tmp_path,
+        straggler_html_bytes=0,
     )
     plan = plan_of(df)
     assert "InMemoryTableScan" not in plan
-    scan_locs = [l for l in plan.splitlines() if "Location:" in l]
-    assert scan_locs and all("onnxocr_routed_spill_" in l for l in scan_locs), plan
     assert "Generate" in plan  # posexplode active
+
+
+def test_straggler_leg_runs_detect_once(spark, queries):
+    # the explode consumes detect's output in ONE branch (posexplode_outer
+    # keeps zero-region docs), so the detect kernel runs once per doc
+    plan = plan_of(extract(pages_table(spark, SF0001), straggler_html_bytes=0))
+    assert plan.count("MapInPandas") == 1, plan
+
+
+def test_probe_does_not_run_the_spread_shuffle(spark, queries, monkeypatch, tmp_path):
+    # extract() probes its input before spreading it by url: on a
+    # 1-partition input, as on an already-spread one, the build runs the
+    # jobs of probing the input as given and no shuffle by url
+    spread = pages_table(spark, SF0001)
+    assert spread.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+    for pages in (spread, spread.coalesce(1)):
+        _build_runs_only_the_probe(spark, pages, monkeypatch, tmp_path)
+
+
+def test_null_stats_in_parquet_push_size_filters(spark, queries, tmp_path):
+    # a file-backed table with some NULL html_size: both legs' scans carry
+    # the pushable "html_size <op> T OR html_size IS NULL" pre-filter, and
+    # rows equal the clean table's
+    clean = pages_table(spark, SF0001)
+    threshold = int(clean.approxQuantile("html_size", [0.5], 0.0)[0])
+    path = str(tmp_path / "pages")
+    clean.withColumn(
+        "html_size",
+        F.when(F.xxhash64("url") % 3 == 0, F.lit(None).cast("long"))
+        .otherwise(F.col("html_size")),
+    ).write.parquet(path)
+    df = extract(spark.read.parquet(path), straggler_html_bytes=threshold)
+    plan = plan_of(df)
+    scans = [l for l in plan.splitlines() if "FileScan parquet" in l]
+    assert len(scans) == 2, plan
+    for scan in scans:
+        assert "html_size" in scan.split("PushedFilters")[-1].split("ReadSchema")[0], scan
+    assert "Generate" in plan
+    cols = ["url", "n_spans", "checksum"]
+    want = extract(clean, straggler_html_bytes=threshold).select(cols).collect()
+    assert sorted(map(tuple, df.select(cols).collect())) == sorted(map(tuple, want))
+
+
+@pytest.mark.parametrize("sized", [True, False])
+@pytest.mark.parametrize("threshold", [1 << 20, 0])
+def test_null_and_undecodable_html_come_out_empty(spark, queries, sized, threshold):
+    # a NULL html takes the small leg; an undecodable payload with no
+    # regions takes the big leg at threshold 0; each is one row, 0 spans
+    pages = pages_table(spark, SF0001).limit(4).unionByName(
+        spark.createDataFrame(
+            [("null-doc", None, None), ("bad-doc", b"\xff\xfe", 2)],
+            "url string, html binary, html_size long",
+        ),
+        allowMissingColumns=True,
+    )
+    if not sized:
+        pages = pages.drop("html_size")
+    rows = {
+        r["url"]: r["n_spans"]
+        for r in extract(pages, straggler_html_bytes=threshold).collect()
+    }
+    assert len(rows) == 6
+    assert rows["null-doc"] == 0 and rows["bad-doc"] == 0
 
 
 def test_extract_has_bounded_shuffles(spark, queries):
