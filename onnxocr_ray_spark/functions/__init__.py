@@ -9,8 +9,6 @@ round identically.
 
 from __future__ import annotations
 
-from typing import List
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -39,24 +37,6 @@ def shingles_of(words: Column, n: int = 3) -> Column:
     return F.transform(
         idx, lambda i: F.concat_ws(" ", F.slice(words, i, n))
     )
-
-
-def minhash_signature(shingles: Column, k: int) -> List[Column]:
-    """k MinHash signature values: min over md5("<seed>|<shingle>").
-
-    Lexicographic min over fixed-width lowercase hex == numeric min over
-    the 128-bit hash, identically in Spark and DuckDB. Empty shingle set
-    -> null signature (callers filter).
-    """
-    def hasher(seed: int):
-        # single-arg lambda: a two-arg lambda would make F.transform pass
-        # the element INDEX as the second argument
-        return lambda s: portable_md5(F.concat(F.lit(f"{seed}|"), s))
-
-    return [
-        F.array_min(F.transform(shingles, hasher(seed))).alias(f"sig{seed}")
-        for seed in range(k)
-    ]
 
 
 def cosine_sim(a: Column, b: Column) -> Column:

@@ -49,7 +49,7 @@ from pyspark.sql import types as T
 from onnxocr_ray_spark.config import DEFAULT_CONFIG, ExtractConfig
 from onnxocr_ray_spark.kernels.classify import classify_angle, maybe_rotate
 from onnxocr_ray_spark.kernels.html import decode_html
-from onnxocr_ray_spark.kernels.pipeline import detect_sorted_src
+from onnxocr_ray_spark.kernels.pipeline import _ratio, detect_sorted_src
 from onnxocr_ray_spark.kernels.recognize import pack_batches, recognize_span
 
 BOX_T = T.ArrayType(T.ArrayType(T.DoubleType()))
@@ -105,17 +105,9 @@ def _detect_doc_src(src: Optional[str], cfg: ExtractConfig) -> List[dict]:
     regions = detect_sorted_src(src, cfg)
     if not regions:
         return []
-    ratios = []
-    for r in regions:
-        # axis-aligned extent: identical to corner arithmetic for quads,
-        # bounding-rect ratio for det_box_type="poly" outlines
-        xs = [p[0] for p in r.box]
-        ys = [p[1] for p in r.box]
-        w = max(xs) - min(xs)
-        h = max(ys) - min(ys)
-        ratios.append(w / h if h > 0.0 else 0.0)
     batch_id, rec_width, _ = pack_batches(
-        ratios, cfg.rec_batch_num, cfg.rec_image_height, cfg.rec_seed_ratio
+        [_ratio(r.box) for r in regions],
+        cfg.rec_batch_num, cfg.rec_image_height, cfg.rec_seed_ratio,
     )
     return [
         {

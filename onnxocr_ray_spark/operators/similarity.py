@@ -2,7 +2,10 @@
 
 - brute-force cosine top-k (the correctness baseline), and
 - sign-LSH bucketed ANN (the scale path: bucket by the sign pattern of
-  leading dimensions, search only the query's bucket).
+  leading dimensions, search only the query's bucket), and
+- IVF: every IVF query (``ann_ivf_probe``, ``ann_ivf_trained``,
+  ``ann_ivf_recall``, ``dedup_semantic``) takes its centroids from
+  ``_ivf_train`` and assigns with the one argmax ``_ivf_assign``.
 
 Cosine is computed with an explicit left-to-right double accumulation on
 both engines (functions.cosine_sim ↔ DuckDB list_sum/list_transform) and
@@ -23,9 +26,17 @@ from onnxocr_ray_spark.operators.pairs import blocked_pairs, column, upper
 from onnxocr_ray_spark.registry import register
 from onnxocr_ray_spark.sources.tables import load_table, spread_scan
 
-_COS_SQL = """list_sum(list_transform(range(1, 65), i -> a.v[i] * b.v[i]))
-           / (sqrt(list_sum(list_transform(a.v, x -> x * x)))
-              * sqrt(list_sum(list_transform(b.v, x -> x * x))))"""
+
+def _cos_sql(x: str, y: str) -> str:
+    """DuckDB cosine of the 64-dim list columns ``x`` and ``y``: the same
+    left-to-right fold as ``functions.cosine_sim``."""
+    return f"""list_sum(list_transform(range(1, 65), i -> {x}[i] * {y}[i]))
+           / (sqrt(list_sum(list_transform({x}, x -> x * x)))
+              * sqrt(list_sum(list_transform({y}, x -> x * x))))"""
+
+
+_COS_SQL = _cos_sql("a.v", "b.v")
+_QCOS_SQL = f"round({_cos_sql('a.v', 'q.v')}, 6)"
 
 _E_SQL = "SELECT vec_id, label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings"
 
@@ -47,7 +58,7 @@ def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sql=f"""
     WITH e AS ({_E_SQL}),
     q AS (SELECT v FROM e WHERE vec_id = 0)
-    SELECT a.vec_id, round({_COS_SQL.replace('b.v', 'q.v')}, 6) AS cos
+    SELECT a.vec_id, {_QCOS_SQL} AS cos
     FROM e a, q
     WHERE a.vec_id <> 0
     ORDER BY cos DESC, a.vec_id
@@ -92,7 +103,7 @@ def _sign_bucket():
     WITH e AS ({_E_SQL}),
     eb AS (SELECT vec_id, v, {_BUCKET_SQL} AS bucket FROM e),
     q AS (SELECT v, bucket FROM eb WHERE vec_id = 0)
-    SELECT a.vec_id, a.bucket, round({_COS_SQL.replace('b.v', 'q.v')}, 6) AS cos
+    SELECT a.vec_id, a.bucket, {_QCOS_SQL} AS cos
     FROM eb a JOIN q ON a.bucket = q.bucket
     WHERE a.vec_id <> 0
     ORDER BY cos DESC, a.vec_id
@@ -160,16 +171,80 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QCOS_SQL = """round(list_sum(list_transform(range(1, 65), i -> a.v[i] * q.v[i]))
-           / (sqrt(list_sum(list_transform(a.v, x -> x * x)))
-              * sqrt(list_sum(list_transform(q.v, x -> x * x)))), 6)"""
-
-_CCOS_SQL = """round(list_sum(list_transform(range(1, 65), i -> a.v[i] * c.cv[i]))
-           / (sqrt(list_sum(list_transform(a.v, x -> x * x)))
-              * sqrt(list_sum(list_transform(c.cv, x -> x * x)))), 6)"""
+_CCOS_SQL = f"round({_cos_sql('a.v', 'c.cv')}, 6)"
+_QC_COS = f"round({_cos_sql('q.v', 'c.cv')}, 6)"
 
 _IVF_K = 8       # coarse centroids (seeds); grows with corpus size
 _IVF_NPROBE = 2  # centroid lists searched per query
+_Q_SCALE = 1048576.0  # 2^20: quantization grid for the centroid update
+
+
+def _assign_sql(c: str) -> str:
+    """The DuckDB mirror of ``_ivf_assign``: (vec_id, cid) of each
+    vector's nearest centroid in ``c``, ties to the lower cid."""
+    return f"""SELECT vec_id, cid FROM (
+        SELECT a.vec_id, c.cid,
+               row_number() OVER (
+                 PARTITION BY a.vec_id
+                 ORDER BY {_CCOS_SQL} DESC, c.cid) AS rn
+        FROM e a, {c}) WHERE rn = 1"""
+
+
+def _ivf_assign(e: DataFrame, c: DataFrame) -> DataFrame:
+    """The IVF argmax: (vec_id, cid, ccos) of every vector's nearest
+    centroid, ``ccos = round(cosine_sim(v, cv), 6)`` and ties to the lower
+    cid (``_assign_sql``). Centroids are broadcast, only the skinny
+    (vec_id, cid, ccos) rows enter the vec_id shuffle, and the top-1
+    window runs map-side first. Every IVF query assigns through here."""
+    ccos = F.round(cosine_sim(F.col("v"), F.col("cv")), 6)
+    w = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), "cid")
+    return (
+        e.crossJoin(F.broadcast(c))
+        .select("vec_id", "cid", ccos.alias("ccos"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", "cid", "ccos")
+    )
+
+
+def _ivf_train(e: DataFrame, iters: int) -> DataFrame:
+    """Broadcast centroids (cid, cv) after ``iters`` deterministic Lloyd
+    steps. ``iters=0`` is the seed set, the one seed rule: the ``_IVF_K``
+    lowest vec_ids. Each step assigns with ``_ivf_assign`` and updates
+    with integer-quantized, order-independent member sums; an empty
+    cluster keeps its quantized previous centroid (``ann_ivf_trained``
+    has the why)."""
+    qexpr = lambda col: F.floor(col * F.lit(_Q_SCALE) + F.lit(0.5)).cast("long")
+    c = e.filter(F.col("vec_id") < _IVF_K).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
+    )
+    for _ in range(iters):
+        # explode to (cid, dim, quantized component); the int64 sums
+        # partial-aggregate map-side, K x 64 rows cross the wire
+        dims = (
+            _ivf_assign(e, c).join(e, "vec_id")
+            .select("cid", F.posexplode("v").alias("d", "x"))
+            .select("cid", "d", qexpr(F.col("x")).alias("qx"))
+            .groupBy("cid", "d")
+            .agg(F.sum("qx").alias("s"))
+        )
+        learned = dims.groupBy("cid").agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("d", "s"))),
+                lambda p: p["s"].cast("double"),
+            ).alias("learned_cv")
+        )
+        # quantizing a learned component (already a big integer-valued
+        # double) is exact: the value carries 20 trailing zero bits, so
+        # x*2^20 is representable and floor(+0.5) returns it unchanged
+        c = c.join(F.broadcast(learned), "cid", "left").select(
+            "cid",
+            F.coalesce(
+                F.col("learned_cv"),
+                F.transform(F.col("cv"), lambda x: qexpr(x).cast("double")),
+            ).alias("cv"),
+        )
+    return F.broadcast(c)
 
 
 @register(
@@ -179,12 +254,7 @@ _IVF_NPROBE = 2  # centroid lists searched per query
     WITH e AS ({_E_SQL}),
     c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {_IVF_K}),
     assign AS (
-      SELECT vec_id, cid FROM (
-        SELECT a.vec_id, c.cid,
-               row_number() OVER (
-                 PARTITION BY a.vec_id
-                 ORDER BY {_CCOS_SQL} DESC, c.cid) AS rn
-        FROM e a, c) WHERE rn = 1
+      {_assign_sql("c")}
     ),
     qprobe AS (
       SELECT cid FROM (
@@ -213,16 +283,16 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Structure (all deterministic, so the DuckDB oracle reproduces it
     exactly):
 
-    - **Coarse quantizer**: K seed vectors chosen by a fixed rule
+    - **Coarse quantizer**: the K seed vectors of ``_ivf_train(e, 0)``
       (smallest vec_ids) stand in for trained k-means centroids — the
       plumbing (broadcast centroids, argmax assignment, inverted lists,
       nprobe search) is identical to a trained IVF; swapping in trained
-      centroids changes only the seed table.
-    - **Assignment** (index build): one crossJoin against the K
-      broadcast centroids projected to SKINNY rows (vec_id, cid, cos) —
-      the 512-byte vector column never enters the shuffle — then a
-      row_number window keyed by vec_id picks the argmax
-      (round-then-order ties broken by cid on both engines).
+      centroids changes only the ``iters`` argument.
+    - **Assignment** (index build): ``_ivf_assign``, one crossJoin
+      against the K broadcast centroids projected to SKINNY rows
+      (vec_id, cid, ccos) — the 512-byte vector column never enters the
+      shuffle — then a row_number window keyed by vec_id picks the
+      argmax (round-then-order ties broken by cid on both engines).
     - **Probe** (query): cosine against K centroids picks nprobe lists;
       the probed-cid semi-filter lands BEFORE the fat join back to the
       vectors, so only ~n*nprobe/K full vectors are read for exact
@@ -235,31 +305,18 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     as DataFrame ops.
     """
     e = _vecs(spark, sf_dir)
-    c = F.broadcast(
-        e.filter(F.col("vec_id") < _IVF_K).select(
-            F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-        )
-    )
-    ccos = F.round(cosine_sim(F.col("v"), F.col("cv")), 6)
-    # skinny assignment rows: the fat v column stays out of the shuffle
-    scored = e.crossJoin(c).select("vec_id", "cid", ccos.alias("ccos"))
-    w = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), "cid")
-    assign = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid")
-    )
+    c = _ivf_train(e, 0)
     q = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
     qprobe = F.broadcast(
-        e.filter(F.col("vec_id") == 0)
-        .select(F.col("v").alias("qv"))
-        .crossJoin(c)
+        q.crossJoin(c)
         .select("cid", F.round(cosine_sim(F.col("qv"), F.col("cv")), 6).alias("qcos"))
         .orderBy(F.col("qcos").desc(), "cid")
         .limit(_IVF_NPROBE)
         .select("cid")
     )
-    probed = assign.join(qprobe, "cid").select("vec_id", F.col("cid").alias("centroid_id"))
+    probed = _ivf_assign(e, c).join(qprobe, "cid").select(
+        "vec_id", F.col("cid").alias("centroid_id")
+    )
     return (
         e.join(probed, "vec_id")
         .filter(F.col("vec_id") != 0)
@@ -274,9 +331,6 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q_SCALE = 1048576.0  # 2^20: quantization grid for the centroid update
-
-
 @register(
     "ann_ivf_trained",
     priority=12,
@@ -284,12 +338,7 @@ _Q_SCALE = 1048576.0  # 2^20: quantization grid for the centroid update
     WITH e AS ({_E_SQL}),
     c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {_IVF_K}),
     a1 AS (
-      SELECT vec_id, cid FROM (
-        SELECT a.vec_id, c.cid,
-               row_number() OVER (
-                 PARTITION BY a.vec_id
-                 ORDER BY {_CCOS_SQL} DESC, c.cid) AS rn
-        FROM e a, c0 c) WHERE rn = 1
+      {_assign_sql("c0 c")}
     ),
     dims AS (
       SELECT a1.cid, t.d,
@@ -338,59 +387,15 @@ def ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
       re-plans — produces identical centroids (|sum| < 2^53 keeps the
       final double cast exact).
 
-    Scale shape: assignment is the ann_ivf_probe skinny argmax; the
-    update explodes members to (cid, dim, q) rows that partial-aggregate
-    map-side down to K x 64 rows crossing the shuffle; empty clusters
-    keep their quantized seed. The final reassignment is one broadcast
-    crossJoin + the same map-side top-1 window."""
+    Scale shape: the step is ``_ivf_train(e, 1)`` — assignment is the
+    ``_ivf_assign`` skinny argmax; the update explodes members to (cid,
+    dim, q) rows that partial-aggregate map-side down to K x 64 rows
+    crossing the shuffle; empty clusters keep their quantized seed. The
+    final reassignment is ``_ivf_assign`` again against the learned
+    centroids."""
     e = _vecs(spark, sf_dir)
-    qexpr = lambda col: F.floor(col * F.lit(_Q_SCALE) + F.lit(0.5)).cast("long")
-    c0 = e.filter(F.col("vec_id") < _IVF_K).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    ccos = F.round(cosine_sim(F.col("v"), F.col("cv")), 6)
-    w = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), "cid")
-    a1 = (
-        e.crossJoin(F.broadcast(c0))
-        .select("vec_id", "cid", ccos.alias("ccos"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid")
-    )
-    # centroid update: explode to (cid, dim, quantized component); the
-    # int64 sums partial-aggregate map-side, K x 64 rows cross the wire
-    dims = (
-        a1.join(e, "vec_id")
-        .select("cid", F.posexplode("v").alias("d", "x"))
-        .select("cid", "d", qexpr(F.col("x")).alias("qx"))
-        .groupBy("cid", "d")
-        .agg(F.sum("qx").alias("s"))
-    )
-    learned = dims.groupBy("cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "s"))),
-            lambda p: p["s"].cast("double"),
-        ).alias("learned_cv")
-    )
-    c1 = F.broadcast(
-        c0.join(F.broadcast(learned), "cid", "left").select(
-            "cid",
-            F.coalesce(
-                F.col("learned_cv"),
-                F.transform(F.col("cv"), lambda x: qexpr(x).cast("double")),
-            ).alias("cv"),
-        )
-    )
-    return (
-        e.crossJoin(c1)
-        .select("vec_id", F.col("cid"), ccos.alias("ccos"))
-        .withColumn("rn", F.row_number().over(w.orderBy(F.col("ccos").desc(), "cid")))
-        .filter(F.col("rn") == 1)
-        .select(
-            "vec_id",
-            F.col("cid").alias("centroid_id"),
-            F.col("ccos").alias("cos"),
-        )
+    return _ivf_assign(e, _ivf_train(e, 1)).select(
+        "vec_id", F.col("cid").alias("centroid_id"), F.col("ccos").alias("cos")
     )
 
 
@@ -405,57 +410,6 @@ _IVF_ITERS = 2   # Lloyd iterations for the recall query
 _IVF_NQ = 4      # query vectors (vec_id < _IVF_NQ)
 
 
-def _ivf_assign(e: DataFrame, c: DataFrame) -> DataFrame:
-    """Skinny argmax assignment (vec_id, cid) of every vector to its
-    nearest centroid — same shape as ann_ivf_probe: broadcast centroids,
-    (vec_id, cid, cos) rows into the shuffle, map-side top-1 window."""
-    ccos = F.round(cosine_sim(F.col("v"), F.col("cv")), 6)
-    w = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), "cid")
-    return (
-        e.crossJoin(F.broadcast(c))
-        .select("vec_id", "cid", ccos.alias("ccos"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid")
-    )
-
-
-def _ivf_train(e: DataFrame, iters: int) -> DataFrame:
-    """N deterministic Lloyd iterations (ann_ivf_trained semantics per
-    step: integer-quantized order-independent centroid update, quantized
-    previous centroid kept for empty clusters). Returns (cid, cv)."""
-    qexpr = lambda col: F.floor(col * F.lit(_Q_SCALE) + F.lit(0.5)).cast("long")
-    c = e.filter(F.col("vec_id") < _IVF_K).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    for _ in range(iters):
-        a = _ivf_assign(e, c)
-        dims = (
-            a.join(e, "vec_id")
-            .select("cid", F.posexplode("v").alias("d", "x"))
-            .select("cid", "d", qexpr(F.col("x")).alias("qx"))
-            .groupBy("cid", "d")
-            .agg(F.sum("qx").alias("s"))
-        )
-        learned = dims.groupBy("cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "s"))),
-                lambda p: p["s"].cast("double"),
-            ).alias("learned_cv")
-        )
-        # quantizing a learned component (already a big integer-valued
-        # double) is exact: the value carries 20 trailing zero bits, so
-        # x*2^20 is representable and floor(+0.5) returns it unchanged
-        c = c.join(F.broadcast(learned), "cid", "left").select(
-            "cid",
-            F.coalesce(
-                F.col("learned_cv"),
-                F.transform(F.col("cv"), lambda x: qexpr(x).cast("double")),
-            ).alias("cv"),
-        )
-    return F.broadcast(c)
-
-
 def _ivf_sql_ctes(iters: int):
     """The DuckDB mirror of _ivf_train as a CTE chain; returns (ctes,
     final centroid CTE name)."""
@@ -465,12 +419,7 @@ def _ivf_sql_ctes(iters: int):
     prev = "c0"
     for i in range(1, iters + 1):
         ctes.append(f"""a{i} AS (
-      SELECT vec_id, cid FROM (
-        SELECT a.vec_id, c.cid,
-               row_number() OVER (
-                 PARTITION BY a.vec_id
-                 ORDER BY {_CCOS_SQL} DESC, c.cid) AS rn
-        FROM e a, {prev} c) WHERE rn = 1)""")
+      {_assign_sql(prev + " c")})""")
         ctes.append(f"""dims{i} AS (
       SELECT a{i}.cid, t.d,
              sum(CAST(floor(e.v[t.d] * {_Q_SCALE} + 0.5) AS BIGINT)) AS s
@@ -492,14 +441,6 @@ def _ivf_sql_ctes(iters: int):
     return ctes, prev
 
 
-_QA_COS = """round(list_sum(list_transform(range(1, 65), i -> a.v[i] * q.v[i]))
-           / (sqrt(list_sum(list_transform(a.v, x -> x * x)))
-              * sqrt(list_sum(list_transform(q.v, x -> x * x)))), 6)"""
-_QC_COS = """round(list_sum(list_transform(range(1, 65), i -> q.v[i] * c.cv[i]))
-           / (sqrt(list_sum(list_transform(q.v, x -> x * x)))
-              * sqrt(list_sum(list_transform(c.cv, x -> x * x)))), 6)"""
-
-
 def _ivf_recall_sql() -> str:
     ctes, cfin = _ivf_sql_ctes(_IVF_ITERS)
     cte_block = ",\n    ".join(ctes)
@@ -512,15 +453,10 @@ def _ivf_recall_sql() -> str:
         SELECT q.vec_id AS qid, a.vec_id,
                row_number() OVER (
                  PARTITION BY q.vec_id
-                 ORDER BY {_QA_COS} DESC, a.vec_id) AS rn
+                 ORDER BY {_QCOS_SQL} DESC, a.vec_id) AS rn
         FROM e a, queries q WHERE a.vec_id <> q.vec_id) WHERE rn <= 10),
     af AS (
-      SELECT vec_id, cid FROM (
-        SELECT a.vec_id, c.cid,
-               row_number() OVER (
-                 PARTITION BY a.vec_id
-                 ORDER BY {_CCOS_SQL} DESC, c.cid) AS rn
-        FROM e a, {cfin} c) WHERE rn = 1),
+      {_assign_sql(cfin + " c")}),
     qprobe AS (
       SELECT qid, cid FROM (
         SELECT q.vec_id AS qid, c.cid,
@@ -533,7 +469,7 @@ def _ivf_recall_sql() -> str:
         SELECT p.qid, a.vec_id,
                row_number() OVER (
                  PARTITION BY p.qid
-                 ORDER BY {_QA_COS} DESC, a.vec_id) AS rn
+                 ORDER BY {_QCOS_SQL} DESC, a.vec_id) AS rn
         FROM qprobe p
         JOIN af s ON p.cid = s.cid
         JOIN e a ON s.vec_id = a.vec_id
@@ -566,8 +502,8 @@ def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@10 of the IVF nprobe search vs brute force, per query.
 
     Both engines compute the identical quantity: trained centroids
-    (N=2 Lloyd iterations, bit-exact across engines via the quantized
-    update), final inverted-list assignment, per-query probe of the
+    (``_ivf_train``, N=2 Lloyd iterations, bit-exact across engines via
+    the quantized update), final ``_ivf_assign`` inverted-list assignment, per-query probe of the
     nprobe nearest lists, exact cosine top-10 within the probed lists,
     intersected with the global brute-force top-10. Deterministic
     tie-breaks everywhere (round(cos, 6) DESC, vec_id).
@@ -633,7 +569,7 @@ _SEMDEDUP_TAU = 0.40  # corpus-dependent; sized so the synthetic corpus
                       # has real drops (18-19 across SFs), like the
                       # deliberately-small bloom m
 
-_PAIR_COS_SQL = _COS_SQL.replace("a.v", "ea.v").replace("b.v", "eb.v")
+_PAIR_COS_SQL = _cos_sql("ea.v", "eb.v")
 
 
 @register(
@@ -643,12 +579,7 @@ _PAIR_COS_SQL = _COS_SQL.replace("a.v", "ea.v").replace("b.v", "eb.v")
     WITH e AS ({_E_SQL}),
     c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {_IVF_K}),
     assign AS (
-      SELECT vec_id, cid FROM (
-        SELECT a.vec_id, c.cid,
-               row_number() OVER (
-                 PARTITION BY a.vec_id
-                 ORDER BY {_CCOS_SQL} DESC, c.cid) AS rn
-        FROM e a, c) WHERE rn = 1
+      {_assign_sql("c")}
     ),
     drops AS (
       SELECT DISTINCT sb.vec_id
@@ -678,8 +609,9 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantic neighborhood (SemDeDup, Abbas et al. 2023 semantics with a
     deterministic lowest-id keep rule).
 
-    Scale shape: assignment is the ann_ivf_probe skinny argmax (the fat
-    vector never enters that shuffle); the pairwise verify shuffles on
+    Scale shape: assignment is the ``_ivf_assign`` skinny argmax over
+    the ``_ivf_train(e, 0)`` seeds (the fat vector never enters that
+    shuffle); the pairwise verify shuffles on
     cid only, and each cluster's candidate block is cluster_size^2 —
     bounded by construction when K tracks corpus size. No global
     pairwise join exists anywhere in the plan.
@@ -690,10 +622,8 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpreted join plan it replaced).
     """
     e = _vecs(spark, sf_dir)
-    c = e.filter(F.col("vec_id") < _IVF_K).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    assign = _ivf_assign(e, c)
+    # ccos is dropped here: blocked_pairs ships every column it is given
+    assign = _ivf_assign(e, _ivf_train(e, 0)).select("vec_id", "cid")
     member = assign.join(e.select("vec_id", "v"), "vec_id")
     cands = _cluster_cos_candidates(member)
     # exact predicate stays in the JVM: round(cos, 6) of the kernel's

@@ -110,3 +110,40 @@ def test_dedup_semantic_survives_one_giant_cluster(spark):
     kept = sorted(set(range(n)) - dropped)
     assert kept == [0]  # exactly the lowest id survives
     assert wall < 120, f"giant-cluster pairwise took {wall:.1f}s"
+
+
+def test_ivf_argmax_breaks_ties_to_lower_cid(spark):
+    """The one IVF argmax (``_ivf_assign``) that every IVF query and the
+    SemDeDup assignment share: equal rounded cosines go to the lower cid
+    whatever the centroid rows' order, ``ccos`` is the winner's
+    ``round(cosine_sim(v, cv), 6)``, and the seed set of
+    ``_ivf_train(e, 0)`` is exactly the ``vec_id < _IVF_K`` rows."""
+    import math
+
+    from onnxocr_ray_spark.functions import cosine_sim
+    from onnxocr_ray_spark.operators.similarity import _IVF_K, _ivf_assign, _ivf_train
+
+    dim = 8
+    vecs = {i: [1.0, (i % 5) * 1e-3, (i % 3) * 1e-3] + [0.0] * (dim - 3) for i in range(12)}
+    e = spark.createDataFrame(sorted(vecs.items()), "vec_id long, v array<double>")
+    near = [1.0] + [0.0] * (dim - 1)
+    far = [0.0, 0.0, 0.0, 1.0] + [0.0] * (dim - 4)
+    # cid 1 comes first: the tie must not follow row order
+    c = spark.createDataFrame([(1, near), (2, far), (0, near)], "cid long, cv array<double>")
+
+    got = {r.vec_id: (r.cid, r.ccos) for r in _ivf_assign(e, c).collect()}
+    assert sorted(got) == sorted(vecs)
+    assert {cid for cid, _ in got.values()} == {0}
+    want = {
+        r.vec_id: r.cos
+        for r in e.crossJoin(c.filter(F.col("cid") == 0))
+        .select("vec_id", F.round(cosine_sim(F.col("v"), F.col("cv")), 6).alias("cos"))
+        .collect()
+    }
+    assert {i: ccos for i, (_, ccos) in got.items()} == want
+    for i, (_, ccos) in got.items():
+        v = vecs[i]
+        assert abs(ccos - v[0] / math.sqrt(sum(x * x for x in v))) < 1e-6
+
+    seeds = {r.cid: list(r.cv) for r in _ivf_train(e, 0).collect()}
+    assert seeds == {i: v for i, v in vecs.items() if i < _IVF_K}
