@@ -5,8 +5,9 @@ A from-scratch rebuild of the capabilities of the reference repo
 Spark-first: the reference's three-stage extraction pipeline (detect
 regions → classify orientation → recognize/decode → assemble) becomes a
 chain of DataFrame transformations over an Iceberg/parquet table of
-Common-Crawl-style web pages, with all heavy per-document work in
-Arrow-batched ``mapInPandas`` stages, plus the large-scale training-data
+Common-Crawl-style web pages, with the heavy per-document work behind
+one Arrow crossing per stage (``mapInArrow`` over the html scan), plus
+the large-scale training-data
 operators (dedup, similarity search, text analysis) a 100 TB corpus
 pipeline needs.
 

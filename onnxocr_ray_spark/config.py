@@ -31,7 +31,8 @@ class ExtractConfig:
     - ``drop_score=0.5``           (`config.yaml:68`) — final confidence filter
       (the reference HTTP service overrides this to 0.1, `app-service.py:27`)
     - ``cls_thresh=0.9``           (`config.yaml:91`) — rotate-if-flipped gate
-    - ``rec_batch_num=6`` / ``cls_batch_num=6`` (`config.yaml:63,90`)
+    - ``rec_batch_num=6``          (`config.yaml:63`; the classifier's own
+      ``batch_num=6``, `config.yaml:90`, lives on ``OrtClassifier``)
     - ``rec_image_height=48``, seed aspect ratio ``320/48``
       (`onnx_paddleocr.py:39`, `predict_rec.py:98`)
     - ``sort_band_px=10``          (`onnx_paddleocr.py:26`) — reading-order band
@@ -53,7 +54,6 @@ class ExtractConfig:
     # --- classify ---
     use_angle_cls: bool = True            # forced true (onnx_paddleocr.py:37)
     cls_thresh: float = 0.9
-    cls_batch_num: int = 6
 
     # --- recognize ---
     drop_score: float = 0.5
@@ -74,8 +74,6 @@ class ExtractConfig:
     sort_band_px: float = 10.0
 
     # --- scale mechanics (no reference analog; SURVEY.md §4.3 custom work) ---
-    salt_buckets: int = 0                 # 0 = disabled; >0 = salted repartition
-    straggler_span_budget: int = 64       # split docs with more spans than this
     coalesce_target_bytes: int = 4 << 20  # dynamic batch coalescing budget
 
     # --- scoring weights for the content-density heuristic (detect) ---

@@ -2,9 +2,10 @@
 
 These run the real three-stage pipeline over pages synthesized from the
 ``documents`` table at the requested scale. They are not SQL-expressible
-(three mapInPandas stages + the bounded bubble sort), so the driver
-records rows-only checks; byte-level correctness is enforced by the
-oracle parity suite (tests/test_extract_parity.py) instead.
+(Python kernels behind a mapInArrow pass + the bounded bubble sort), so
+the driver records rows-only checks; byte-level correctness is enforced
+by the oracle parity suites (tests/test_extract_parity.py,
+tests/test_detect_parity.py) instead.
 """
 
 from __future__ import annotations

@@ -5,39 +5,42 @@ Mirrors the reference's stage boundaries (`app-service.py` endpoints
 exactly here; `onnx_paddleocr.py:72-114` composes them) — but the
 architecture is Spark-first, not a translation:
 
-- **detect** is one ``mapInPandas`` over the pages scan. Catalyst prunes
-  the scan to (url, html); AQE sizes the partitions. Batch packing for the
-  recognize stage (the reference's width-argsort + chunks-of-6 with shared
-  padded width, `predict_rec.py:86-107`) is computed HERE, per document,
-  and recorded per span — so every later stage is embarrassingly
+- every stage that reads html crosses into Python ONCE, through
+  ``_map_html``: one ``mapInArrow`` over the pages scan, pruned by
+  Catalyst to (url, html), that decodes each payload straight from the
+  Arrow buffer and runs one per-document function on it.
+- **detect** is ``_map_html`` with the detect kernel; ``n_regions`` is
+  ``size(spans)``, computed in the JVM. Batch packing for the recognize
+  stage (the reference's width-argsort + chunks-of-6 with shared padded
+  width, `predict_rec.py:86-107`) is computed HERE, per document, and
+  recorded per span — so every later stage is embarrassingly
   span-parallel while remaining byte-identical to the serial oracle no
   matter how spans are re-partitioned (SURVEY.md §4.1.1 determinism
   coupling, solved structurally).
 - the production ``extract()`` routes heavy-tail documents away from the
   fused fast path (``extract_fused``: ALL three stages in one
-  mapInPandas — zero shuffles, one Arrow crossing) into detect ->
+  ``_map_html`` pass — zero shuffles, one Arrow crossing) into detect ->
   span-explode -> recognize -> regroup so one giant page cannot straggle
   a task. Routing is by the ``html_size`` column (derived as
   ``octet_length(html)`` when the input lacks it): one probe job counts
   stragglers, a clean corpus runs the pure fused plan, and otherwise
   size-filtered legs split small from big documents. The
-  stage-separated forms (``detect``, ``classify_recognize_grouped``,
-  ``classify_recognize_exploded``) remain public — they are the
-  /detection /classification /recognition endpoint analogs. All paths
-  call the same kernels with the same inputs; parity tests assert
-  byte-identity between them.
+  stage-separated forms (``detect``, ``classify_recognize_exploded``)
+  remain public — they are the /detection and /classification
+  /recognition endpoint analogs. All paths call the same kernels with
+  the same inputs; parity tests assert byte-identity between them.
 - **assemble** is pure JVM-side Catalyst expressions (filter / transform /
   array_join / sha2) — no Python in the final hot path.
 
 At 100 TB: the only required shuffles are the straggler explode/regroup,
 which touches just the heavy tail (a few % of documents). Everything else
-is scan -> narrow mapInPandas -> project, which scales linearly with
+is scan -> narrow mapInArrow -> project, which scales linearly with
 executors.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional
+from typing import Callable, Iterator, List, Optional
 
 import numpy as np
 import pandas as pd
@@ -45,10 +48,10 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from onnxocr_ray_spark.config import DEFAULT_CONFIG, ExtractConfig
 from onnxocr_ray_spark.kernels.classify import classify_angle, maybe_rotate
-from onnxocr_ray_spark.kernels.html import decode_html
 from onnxocr_ray_spark.kernels.pipeline import _ratio, detect_sorted_src
 from onnxocr_ray_spark.kernels.recognize import pack_batches, recognize_span
 
@@ -81,7 +84,6 @@ DETECT_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
         T.StructField("spans", T.ArrayType(DET_SPAN_T)),
-        T.StructField("n_regions", T.IntegerType()),
     ]
 )
 
@@ -93,15 +95,10 @@ REC_DOC_SCHEMA = T.StructType(
 )
 
 
-def _detect_doc(html: Optional[bytes], cfg: ExtractConfig) -> List[dict]:
-    """One document's detect output: sorted regions + precomputed packing."""
-    return _detect_doc_src(decode_html(html), cfg)
-
-
 def _detect_doc_src(src: Optional[str], cfg: ExtractConfig) -> List[dict]:
-    """``_detect_doc`` over an already-decoded source string — the Arrow
-    hot path decodes straight from the Arrow buffer (one str, no
-    intermediate per-row ``bytes``) and enters here."""
+    """One document's detect output: sorted regions + precomputed packing.
+    ``src`` is the html already decoded from the Arrow buffer (None for a
+    NULL, empty or undecodable payload)."""
     regions = detect_sorted_src(src, cfg)
     if not regions:
         return []
@@ -121,37 +118,17 @@ def _detect_doc_src(src: Optional[str], cfg: ExtractConfig) -> List[dict]:
     ]
 
 
-def _chunk_frames(pdf: pd.DataFrame, sizes: pd.Series, budget: int) -> Iterator[pd.DataFrame]:
-    """Dynamic batch coalescing (SURVEY.md §4.3.2): split an Arrow batch at
-    cumulative payload-size boundaries so one huge document doesn't pin a
-    whole batch's worth of output in memory."""
-    if len(pdf) == 0:
-        return
-    acc = 0
-    start = 0
-    for i, sz in enumerate(sizes):
-        acc += int(sz) if sz is not None else 0
-        if acc >= budget and i + 1 > start:
-            yield pdf.iloc[start:i + 1]
-            start = i + 1
-            acc = 0
-    if start < len(pdf):
-        yield pdf.iloc[start:]
-
-
 # --- Arrow hot-path plumbing (mapInArrow) ---------------------------------
 #
-# The fused kernel is the 100-TB hot path, and at high
+# The html-reading stages are the 100-TB hot path, and at high
 # parallelism the binding resource is MEMORY BANDWIDTH, not CPU (the
 # pinned scaling series shows the per-core rate at 8 cores capped well
 # below the bare-kernel rate while 2 cores run at the kernel floor —
-# BENCH/BASELINE.md §2). mapInPandas moved every html payload THREE
-# times on the Python side: Arrow buffer -> per-row ``bytes`` object
-# (arrow->pandas), ``bytes`` -> decoded ``str`` (decode_html), plus the
-# pandas block assembly around it. mapInArrow removes the per-row bytes
-# materialization entirely: html is decoded str(memoryview, 'utf-8')
-# DIRECTLY from the Arrow data buffer slice, urls are re-emitted as
-# zero-copy Arrow slices, and only the span output is newly allocated.
+# BENCH/BASELINE.md §2). So each payload moves once on the Python side:
+# html is decoded str(memoryview, 'utf-8') DIRECTLY from the Arrow data
+# buffer slice (no per-row ``bytes`` object, no pandas block), urls are
+# re-emitted as zero-copy Arrow slices, and only the span output is
+# newly allocated.
 
 
 def _binary_view(arr: "pa.Array"):
@@ -183,14 +160,16 @@ def _decode_mv(mv: memoryview, o0: int, o1: int) -> Optional[str]:
 
 
 def _chunk_bounds(sizes: np.ndarray, budget: int) -> Iterator[tuple]:
-    """_chunk_frames boundaries as (lo, hi) index ranges over payload
-    sizes (identical cut points; sizes come free from the Arrow offsets)."""
+    """Dynamic batch coalescing (SURVEY.md §4.3.2): contiguous (lo, hi)
+    index ranges over payload sizes, each closed once its bytes reach
+    ``budget``, so one huge document doesn't pin a whole batch's worth
+    of output in memory (sizes come free from the Arrow offsets)."""
     n = len(sizes)
     acc = 0
     start = 0
     for i in range(n):
         acc += int(sizes[i])
-        if acc >= budget and i + 1 > start:
+        if acc >= budget:
             yield start, i + 1
             start = i + 1
             acc = 0
@@ -198,40 +177,46 @@ def _chunk_bounds(sizes: np.ndarray, budget: int) -> Iterator[tuple]:
         yield start, n
 
 
-def _arrow_out_schema(spark_schema: T.StructType) -> "pa.Schema":
-    from pyspark.sql.pandas.types import to_arrow_schema
+def _map_html(pages: DataFrame, cfg: ExtractConfig,
+              per_doc: Callable[[Optional[str], ExtractConfig], list],
+              schema: T.StructType) -> DataFrame:
+    """pages(url, html, ...) -> (url, spans = per_doc(decoded html, cfg)).
 
-    return to_arrow_schema(spark_schema)
+    The one Arrow crossing of every html-reading stage: a narrow
+    ``mapInArrow`` over the scan, which Catalyst column-prunes to exactly
+    (url, html). Each Arrow batch is cut at ``cfg.coalesce_target_bytes``
+    of payload and yields one output batch per cut.
+    """
+    out_schema = to_arrow_schema(schema)
+    spans_t = out_schema.field("spans").type
 
+    def gen(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        for rb in batches:
+            url = rb.column("url")
+            offs, mv, nulls = _binary_view(rb.column("html"))
+            for lo, hi in _chunk_bounds(np.diff(offs), cfg.coalesce_target_bytes):
+                spans = [
+                    per_doc(None if nulls is not None and nulls[i]
+                            else _decode_mv(mv, offs[i], offs[i + 1]), cfg)
+                    for i in range(lo, hi)
+                ]
+                yield pa.RecordBatch.from_arrays(
+                    [url.slice(lo, hi - lo), pa.array(spans, type=spans_t)],
+                    schema=out_schema,
+                )
 
-def _arrow_col(rb: "pa.RecordBatch", name: str) -> "pa.Array":
-    return rb.column(rb.schema.get_field_index(name))
+    return pages.select("url", "html").mapInArrow(gen, schema=schema)
 
 
 def detect(pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
     """pages(url, html, ...) -> (url, spans, n_regions).
 
-    Catalyst column-prunes the scan to exactly (url, html); the stage is a
-    narrow transformation (no shuffle).
+    One ``_map_html`` pass (narrow, no shuffle); ``n_regions`` is
+    ``size(spans)``, computed in the JVM.
     """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sizes = pdf["html"].map(lambda h: len(h) if h is not None else 0)
-            for chunk in _chunk_frames(pdf, sizes, cfg.coalesce_target_bytes):
-                spans = [
-                    _detect_doc(bytes(h) if h is not None else None, cfg)
-                    for h in chunk["html"]
-                ]
-                yield pd.DataFrame(
-                    {
-                        "url": chunk["url"].values,
-                        "spans": spans,
-                        "n_regions": [len(s) for s in spans],
-                    }
-                )
-
-    return pages.select("url", "html").mapInPandas(gen, schema=DETECT_SCHEMA)
+    return _map_html(pages, cfg, _detect_doc_src, DETECT_SCHEMA).withColumn(
+        "n_regions", F.size("spans")
+    )
 
 
 def _process_span(raw: str, rec_width: int, cfg: ExtractConfig):
@@ -328,20 +313,6 @@ def _rec_doc(spans, cfg: ExtractConfig) -> List[dict]:
     ]
 
 
-def classify_recognize_grouped(detected: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Fast path: spans stay an array column; narrow mapInPandas, 0 shuffles."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_spans = []
-            for spans in pdf["spans"]:
-                doc = _rec_doc(spans, cfg)
-                out_spans.append(doc)
-            yield pd.DataFrame({"url": pdf["url"].values, "spans": out_spans})
-
-    return detected.mapInPandas(gen, schema=REC_DOC_SCHEMA)
-
-
 _SPAN_UDF_T = T.StructType(
     [
         T.StructField("angle", T.StringType()),
@@ -436,7 +407,7 @@ def assemble(recognized: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> Data
 
 
 def extract_fused(pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
-    """All three stages fused into ONE mapInPandas pass per document.
+    """All three stages fused into ONE ``_map_html`` pass per document.
 
     The reference runs its stages back-to-back in one process for the
     same reason (`onnx_paddleocr.py:72-114`; SURVEY.md §4.2 notes stage
@@ -444,45 +415,17 @@ def extract_fused(pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> Data
     kernels are microseconds, so separate Python stages would pay 3x
     Arrow serialization of the nested span structs for no parallelism
     gain. Output schema = (url, spans: array<REC_SPAN_T>).
-
-    mapInArrow, not mapInPandas: html payloads decode straight from the
-    Arrow buffer (no per-row bytes objects, no pandas block assembly) and
-    urls pass through as zero-copy slices — see the Arrow hot-path note
-    above _binary_view. At high parallelism this stage is memory-bandwidth
-    bound, so bytes-not-moved is wall-clock.
     """
-    out_schema = _arrow_out_schema(REC_DOC_SCHEMA)
-    spans_t = out_schema.field("spans").type
-
-    def gen(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for rb in batches:
-            url = _arrow_col(rb, "url")
-            offs, mv, nulls = _binary_view(_arrow_col(rb, "html"))
-            sizes = np.diff(offs)
-            for lo, hi in _chunk_bounds(sizes, cfg.coalesce_target_bytes):
-                out_spans = []
-                for i in range(lo, hi):
-                    if nulls is not None and nulls[i]:
-                        src = None
-                    else:
-                        src = _decode_mv(mv, offs[i], offs[i + 1])
-                    out_spans.append(_rec_doc(_detect_doc_src(src, cfg), cfg))
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        url.slice(lo, hi - lo),
-                        pa.array(out_spans, type=spans_t),
-                    ],
-                    schema=out_schema,
-                )
-
-    return pages.select("url", "html").mapInArrow(gen, schema=REC_DOC_SCHEMA)
+    return _map_html(
+        pages, cfg, lambda src, c: _rec_doc(_detect_doc_src(src, c), c),
+        REC_DOC_SCHEMA,
+    )
 
 
 SIZE_COL = "html_size"
 
 
 def extract(pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
-            doc_partitions: Optional[int] = None,
             straggler_html_bytes: int = 1 << 20) -> DataFrame:
     """Full pipeline with straggler routing: a metadata-scale probe plus
     size-filtered branches.
@@ -506,24 +449,20 @@ def extract(pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
     a huge doc with a missing stat keeps straggler protection; a NULL
     html takes the small leg.
 
-    The probe reads ``pages`` as given; an under-partitioned input is
-    then spread by url for the extraction itself (``doc_partitions``,
-    default ``defaultParallelism``). Building the plan runs only the
-    probe and writes no files. All legs run identical kernels with
-    identical inputs; tests prove byte-identity whichever leg a
-    document takes.
+    The probe reads ``pages`` as given; an input with fewer partitions
+    than ``defaultParallelism`` is then spread by url into that many for
+    the extraction itself. Building the plan runs only the probe and
+    writes no files. All legs run identical kernels with identical
+    inputs; tests prove byte-identity whichever leg a document takes.
     """
     spread = pages
-    if doc_partitions is None and pages.rdd.getNumPartitions() < (
-        pages.sparkSession.sparkContext.defaultParallelism
-    ):
+    parallelism = pages.sparkSession.sparkContext.defaultParallelism
+    if pages.rdd.getNumPartitions() < parallelism:
         # under-partitioned input (single parquet file, small table):
-        # without this the whole narrow detect chain runs on one core
-        doc_partitions = pages.sparkSession.sparkContext.defaultParallelism
-    if doc_partitions is not None:
-        # uniform doc distribution; url hash is effectively a salt because
-        # input files may be ordered by crawl host (skewed localities)
-        spread = pages.repartition(doc_partitions, "url")
+        # without this the whole narrow detect chain runs on one core.
+        # The url hash is effectively a salt because input files may be
+        # ordered by crawl host (skewed localities)
+        spread = pages.repartition(parallelism, "url")
     return _extract_spread(pages, spread, cfg, straggler_html_bytes)
 
 
@@ -562,5 +501,6 @@ def _extract_spread(probed: DataFrame, pages: DataFrame, cfg: ExtractConfig,
         .select("url", "html")
         .repartition(max(4, parallelism // 4), "url")
     )
-    rec_big = classify_recognize_exploded(detect(big, cfg).drop("n_regions"), cfg)
+    det_big = _map_html(big, cfg, _detect_doc_src, DETECT_SCHEMA)
+    rec_big = classify_recognize_exploded(det_big, cfg)
     return assemble(extract_fused(small, cfg).unionByName(rec_big), cfg)

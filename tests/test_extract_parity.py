@@ -27,15 +27,13 @@ def oracle_results():
 def _collect_spark(spark, cfg, doc_partitions=None, straggler_html_bytes=256 << 10,
                    exact_shape=False):
     pages = pages_from_documents(spark, SF0001)
+    if doc_partitions is not None:
+        pages = pages.repartition(doc_partitions, "url")
     if exact_shape:
         # the north-rule 5-column table (no ingest size column): extract()
         # derives html_size as octet_length(html)
         pages = pages.drop("html_size")
-    out = extract(
-        pages, cfg,
-        doc_partitions=doc_partitions,
-        straggler_html_bytes=straggler_html_bytes,
-    )
+    out = extract(pages, cfg, straggler_html_bytes=straggler_html_bytes)
     rows = out.select("url", "extracted_text", "n_spans", "checksum").collect()
     spark.catalog.clearCache()
     return {r["url"]: r for r in rows}

@@ -204,7 +204,8 @@ def test_straggler_leg_runs_detect_once(spark, queries):
     # the explode consumes detect's output in ONE branch (posexplode_outer
     # keeps zero-region docs), so the detect kernel runs once per doc
     plan = plan_of(extract(pages_table(spark, SF0001), straggler_html_bytes=0))
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 2, plan  # the fused small leg + detect
+    assert "MapInPandas" not in plan, plan
 
 
 def test_probe_does_not_run_the_spread_shuffle(spark, queries, monkeypatch, tmp_path):

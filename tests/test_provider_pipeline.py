@@ -32,7 +32,6 @@ import pytest
 from onnxocr_ray_spark.config import DEFAULT_CONFIG
 from onnxocr_ray_spark.operators.extract import (
     classify_recognize_exploded,
-    classify_recognize_grouped,
     detect,
     extract,
 )
@@ -183,15 +182,13 @@ def _pages_sample(spark):
     from pyspark.sql import functions as F
 
     pages = pages_from_documents(spark, SF0001)
-    # deterministic ~20% slice keeps the 3-path matrix fast
+    # deterministic ~20% slice keeps the path matrix fast
     return pages.where(F.pmod(F.xxhash64("url"), F.lit(5)) == 0)
 
 
 def _run(spark, path, cfg):
     pages = _pages_sample(spark)
-    if path == "grouped":
-        out = classify_recognize_grouped(detect(pages), cfg)
-    elif path == "exploded":
+    if path == "exploded":
         out = classify_recognize_exploded(detect(pages), cfg)
     else:
         out = extract(pages, cfg, straggler_html_bytes=64 << 10)
@@ -218,10 +215,10 @@ def _same(a, b) -> bool:
 
 @pytest.fixture(scope="module")
 def corpus_charset(spark):
-    """Charset from the UNFILTERED grouped path — extract()'s output
+    """Charset from the UNFILTERED exploded path — extract()'s output
     spans are post-drop_score, so chars seen only in dropped spans would
     otherwise be missing from the recognizer's decode dictionary."""
-    full = _run(spark, "grouped", DEFAULT_CONFIG)
+    full = _run(spark, "exploded", DEFAULT_CONFIG)
     return sorted(
         {
             ch
@@ -232,7 +229,7 @@ def corpus_charset(spark):
     )
 
 
-@pytest.mark.parametrize("path", ["grouped", "exploded", "extract"])
+@pytest.mark.parametrize("path", ["exploded", "extract"])
 def test_provider_pipeline_byte_identical_to_standin(spark, path, corpus_charset):
     base = _run(spark, path, DEFAULT_CONFIG)
     assert base and any(r.get("spans") for r in base.values())
