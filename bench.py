@@ -115,7 +115,7 @@ def main() -> None:
     # Warm the JVM (codegen/JIT) AND the executor Python worker pool, so
     # the timings below measure the queries, not first-run compilation or
     # the ~1-2 s spin-up of 32 Python workers (q1 is JVM-only;
-    # dedup_simhash is an Arrow/mapInPandas stage).
+    # dedup_simhash is a per-row mapInArrow stage).
     materialize(queries["q1_pricing"].fn(spark, sf_dir))
     materialize(queries["dedup_simhash"].fn(spark, sf_dir))
 

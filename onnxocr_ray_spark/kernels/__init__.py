@@ -3,7 +3,7 @@
 These are the analog of the reference's numpy/OpenCV kernel library
 (`onnxocr/operators.py`, `onnxocr/db_postprocess.py`, `onnxocr/utils.py`,
 `onnxocr/rec_postprocess.py`): side-effect-free functions over plain data.
-They are shared verbatim by the Spark `mapInPandas` stages and by the
+They are shared verbatim by the Spark `mapInArrow` stages and by the
 single-process oracle (`onnxocr_ray_spark.oracle`), so byte-identity between
 the distributed and serial paths reduces to proving that partitioning,
 batching, salting, and straggler splitting never change *which* kernel calls

@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 from onnxocr_ray_spark.functions import portable_md5, shingles_of, words_of
 from onnxocr_ray_spark.operators.pairs import blocked_pairs, column, grid, set_overlap
 from onnxocr_ray_spark.registry import register
+from onnxocr_ray_spark.rowmap import map_rows
 from onnxocr_ray_spark.sources.tables import load_table, spread_scan
 
 MINHASH_K = 8          # signatures
@@ -97,8 +98,9 @@ def dedup_exact_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Two implementations with identical output:
 #   _shingles_expr — pure Column expressions (the JVM reference semantics
 #                    the Python mirrors are tested against)
-#   _shingled      — Arrow-batched mapInPandas. MEASURED 20-40x faster at
-#                    sf0.1: Catalyst evaluates nested lambda transforms
+#   _shingled      — a per-row Python kernel (``rowmap.map_rows``).
+#                    MEASURED 20-40x faster at sf0.1: Catalyst evaluates
+#                    nested lambda transforms
 #                    (slice/concat/md5 per shingle) interpreted, ~7 ms per
 #                    document; hashlib.md5 over the same strings yields
 #                    bit-identical hex at ~micro-seconds per shingle.
@@ -120,8 +122,6 @@ def _py_shingles(text: str) -> list:
 
 
 def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     docs = spread_scan(
         load_table(spark, sf_dir, "documents").select(
             "doc_id", "lang", "n_chars", "text"
@@ -136,20 +136,12 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def gen(batches):
-        for pdf in batches:
-            sh = [_py_shingles(t) for t in pdf["text"]]
-            keep = [i for i, s in enumerate(sh) if s]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values[keep],
-                    "lang": pdf["lang"].values[keep],
-                    "n_chars": pdf["n_chars"].values[keep],
-                    "shingles": [sh[i] for i in keep],
-                }
-            )
+    def shingle_row(text):
+        sh = _py_shingles(text)
+        return [(sh,)] if sh else ()
 
-    return docs.mapInPandas(gen, schema=schema)
+    return map_rows(docs, ["text"], lambda: shingle_row, schema,
+                    carry=["doc_id", "lang", "n_chars"])
 
 
 # cap on the per-task shingle->digest memo: at real-corpus scale the
@@ -183,10 +175,6 @@ def _signed(spark: SparkSession, sf_dir: str) -> DataFrame:
       hash each distinct shingle once per task instead of once per
       occurrence.
     """
-    import hashlib
-
-    import pandas as pd
-
     docs = spread_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
@@ -198,44 +186,38 @@ def _signed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def gen(batches):
+    def kernel():
         md5 = lambda s: hashlib.md5(s.encode("utf-8")).hexdigest()
         prefixes = [
             hashlib.md5(f"{seed}|".encode("utf-8")) for seed in range(MINHASH_K)
         ]
         memo: dict = {}
-        for pdf in batches:
-            out_id, out_sh, out_bands = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                sh = _py_shingles(text)
-                if not sh:
-                    continue
-                uniq = list(dict.fromkeys(sh))
-                digs = []
-                for s in uniq:
-                    d = memo.get(s)
-                    if d is None:
-                        sb = s.encode("utf-8")
-                        d = []
-                        for p in prefixes:
-                            h = p.copy()
-                            h.update(sb)
-                            d.append(h.digest())
-                        if len(memo) < _MEMO_CAP:
-                            memo[s] = d
-                    digs.append(d)
-                sigs = [m.hex() for m in map(min, zip(*digs))]
-                bands = [
-                    md5(sigs[2 * b] + sigs[2 * b + 1]) for b in range(LSH_BANDS)
-                ]
-                out_id.append(int(doc_id))
-                out_sh.append(uniq)
-                out_bands.append(bands)
-            yield pd.DataFrame(
-                {"doc_id": out_id, "shingles": out_sh, "bands": out_bands}
-            )
 
-    return docs.mapInPandas(gen, schema=schema)
+        def sign_row(text):
+            sh = _py_shingles(text)
+            if not sh:
+                return ()
+            uniq = list(dict.fromkeys(sh))
+            digs = []
+            for s in uniq:
+                d = memo.get(s)
+                if d is None:
+                    sb = s.encode("utf-8")
+                    d = []
+                    for p in prefixes:
+                        h = p.copy()
+                        h.update(sb)
+                        d.append(h.digest())
+                    if len(memo) < _MEMO_CAP:
+                        memo[s] = d
+                digs.append(d)
+            sigs = [m.hex() for m in map(min, zip(*digs))]
+            bands = [md5(sigs[2 * b] + sigs[2 * b + 1]) for b in range(LSH_BANDS)]
+            return [(uniq, bands)]
+
+        return sign_row
+
+    return map_rows(docs, ["text"], kernel, schema, carry=["doc_id"])
 
 
 # DuckDB's lower() differs from Spark's (and Python's, which the kernels
@@ -372,6 +354,24 @@ def simhash_of(text, memo: Optional[dict] = None) -> str:
     return np.where(votes > 0, ord("1"), ord("0")).astype(np.uint8).tobytes().decode("ascii")
 
 
+def _popcount64(x):
+    """Vectorized SWAR popcount over a uint64 ndarray (numpy<2 has no
+    bitwise_count)."""
+    x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
+    x = (x & np.uint64(0x3333333333333333)) + (
+        (x >> np.uint64(2)) & np.uint64(0x3333333333333333)
+    )
+    x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
+    return (x * np.uint64(0x0101010101010101)) >> np.uint64(56)
+
+
+def simhash_int64(sig: str) -> int:
+    """64-char '0'/'1' SimHash string -> signed int64 carrying the same
+    bit pattern (char 0 = most significant bit)."""
+    v = int(sig, 2)
+    return v - (1 << 64) if v >= (1 << 63) else v
+
+
 _ODD_IN = ",".join(f"'{c}'" for c in _ODD_HEX)
 _B2_IN = ",".join(f"'{c}'" for c in _B2_HEX)
 
@@ -406,25 +406,21 @@ _SIMHASH_SQL = f"""
     doc="training-data op: 64-bit SimHash signature (2 bit-votes per token-md5 hex char)",
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Arrow-batched Python path: the Column-expression formulation
+    # per-row Python path: the Column-expression formulation
     # (64 nested aggregate-lambdas over the token hash list) is evaluated
     # interpreted by Catalyst at ~10x the CPU of hashlib — same
     # fast-path rationale as _signed above; the DuckDB oracle pins the
     # output bit-for-bit.
-    import pandas as pd
-
     docs = spread_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    schema = "doc_id long, simhash string"
 
-    def gen(batches):
+    def kernel():
         memo: dict = {}
-        for pdf in batches:
-            sigs = [simhash_of(t, memo) for t in pdf["text"]]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "simhash": sigs})
+        return lambda text: [(simhash_of(text, memo),)]
 
-    return docs.mapInPandas(gen, schema=schema)
+    return map_rows(docs, ["text"], kernel, "doc_id long, simhash string",
+                    carry=["doc_id"])
 
 
 # --- exact n-gram Jaccard with blocking ---
@@ -566,8 +562,6 @@ def _hamming(tbl, cap):
     """Scorer: pairs within Hamming distance SIMHASH_HAMMING_K, by XOR +
     SWAR popcount over signatures packed to uint64 (any consistent bit
     packing preserves Hamming distance)."""
-    from onnxocr_ray_spark.streaming.pipeline import _popcount64
-
     sig = np.ascontiguousarray(_simhash_bands(tbl)).view(np.uint64).ravel()
 
     def block(blk):
@@ -809,7 +803,7 @@ def decon_probes(docs: DataFrame) -> DataFrame:
 def decon_doc_grams(docs: DataFrame) -> DataFrame:
     """(doc_id, gram_h) for every sliding 13-gram of every document.
     Works identically on a batch or streaming ``docs`` frame (one
-    stateless Arrow-batched map, no aggregation).
+    stateless per-row map, no aggregation).
 
     r6: the Column formulation (explode of 13-word slice/concat_ws
     transforms + md5 per gram) ran interpreted in Catalyst — the same
@@ -819,31 +813,17 @@ def decon_doc_grams(docs: DataFrame) -> DataFrame:
     (``_py_shingles``'s fuzz-pinned contract, minus the lowercase),
     ``' '.join`` == ``concat_ws``, and the same 16-hex-char md5 prefix.
     """
-    import hashlib
-
-    import pandas as pd
-
     n = DECON_N
 
-    def gen(batches):
-        for pdf in batches:
-            ids_out, gh_out = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                words = (text or "").strip(" ").split(" ")
-                if len(words) < n:
-                    continue
-                did = int(doc_id)
-                for i in range(len(words) - n + 1):
-                    gram = " ".join(words[i:i + n])
-                    ids_out.append(did)
-                    gh_out.append(
-                        hashlib.md5(gram.encode("utf-8")).hexdigest()[:16]
-                    )
-            yield pd.DataFrame({"doc_id": ids_out, "gram_h": gh_out})
+    def gram_row(text):
+        words = (text or "").strip(" ").split(" ")
+        return [
+            (hashlib.md5(" ".join(words[i:i + n]).encode("utf-8")).hexdigest()[:16],)
+            for i in range(len(words) - n + 1)
+        ]
 
-    return docs.select("doc_id", "text").mapInPandas(
-        gen, schema="doc_id long, gram_h string"
-    )
+    return map_rows(docs, ["text"], lambda: gram_row, "doc_id long, gram_h string",
+                    carry=["doc_id"])
 
 
 # --- exact-substring duplication fraction ---

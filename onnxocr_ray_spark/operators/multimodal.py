@@ -3,31 +3,21 @@
 Images/audio/video at corpus scale are opaque ``binary`` columns with
 typed metadata; the Spark-side contract (schema, partitioning, Arrow
 batch shape, UDF signatures) is real and tested, while the actual codec
-calls are stubbed behind import-tries (cv2/PIL/librosa are not in this
-container) with a deterministic fake so pipelines can be exercised end
-to end (build brief: "make the Spark-side plumbing real and tested").
+calls are a deterministic fake decoder (no codec library is a
+dependency), so pipelines can be exercised end to end with real
+plumbing.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from onnxocr_ray_spark.functions import portable_md5
 from onnxocr_ray_spark.registry import register
+from onnxocr_ray_spark.rowmap import map_rows
 from onnxocr_ray_spark.sources.tables import load_table, spread_scan
-
-try:  # pragma: no cover - not present in this container
-    import cv2  # type: ignore
-
-    HAVE_CV2 = True
-except ImportError:
-    HAVE_CV2 = False
-
 
 # --- payload metadata: pure Column exprs, oracle-checked ---
 
@@ -54,7 +44,7 @@ def mm_payload_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- decode / feature-extract plumbing (mapInPandas, deterministic fake) ---
+# --- decode / feature-extract plumbing (per-row kernel, deterministic fake) ---
 
 MM_FEATURE_SCHEMA = T.StructType(
     [
@@ -67,19 +57,6 @@ MM_FEATURE_SCHEMA = T.StructType(
         T.StructField("decoder", T.StringType()),
     ]
 )
-
-
-def _decode_image_real(payload: bytes):  # pragma: no cover
-    """Real decode path — requires cv2; swapped in automatically when the
-    executor image has it. I/O contract identical to the fake."""
-    if not HAVE_CV2:
-        raise NotImplementedError(
-            "image decode requires cv2; this container runs the deterministic fake"
-        )
-    import numpy as np
-
-    arr = cv2.imdecode(np.frombuffer(payload, dtype="uint8"), cv2.IMREAD_COLOR)
-    return arr
 
 
 def _decode_image_fake(payload: bytes):
@@ -100,34 +77,18 @@ def _decode_image_fake(payload: bytes):
     return h, w, 3, [int(math.floor(v * 1e6 / total + 0.5)) for v in hist]
 
 
+def _feature_row(payload):
+    """One payload -> its MM_FEATURE_SCHEMA values after ``doc_id``."""
+    data = bytes(payload) if payload is not None else b""
+    h, w, c, feat = _decode_image_fake(data)
+    return [(len(data), w, h, c, feat, "fake")]
+
+
 def mm_decode_features(pages_like: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """binary payload column -> typed feature rows via Arrow-batched
-    mapInPandas (the multimodal decode/feature-extract plumbing)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "n_bytes": [],
-                "width": [],
-                "height": [],
-                "channels": [],
-                "feature": [],
-                "decoder": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                data = bytes(payload) if payload is not None else b""
-                h, w, c, feat = _decode_image_fake(data)
-                out["doc_id"].append(int(doc_id))
-                out["n_bytes"].append(len(data))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(c)
-                out["feature"].append(feat)
-                out["decoder"].append("fake" if not HAVE_CV2 else "cv2")
-            yield pd.DataFrame(out)
-
-    return pages_like.mapInPandas(gen, schema=MM_FEATURE_SCHEMA)
+    """binary payload column -> typed feature rows, one per-row kernel
+    call per payload (the multimodal decode/feature-extract plumbing)."""
+    return map_rows(pages_like, [payload_col], lambda: _feature_row,
+                    MM_FEATURE_SCHEMA, carry=["doc_id"])
 
 
 # DuckDB reproduction of the fake decoder's byte histogram, bit-for-bit:
@@ -168,7 +129,7 @@ _PPM_SQL = ", ".join(
            'fake' AS decoder
     FROM cnt
     """,
-    doc="multimodal op: decode + feature-extract plumbing over binary payloads (deterministic fake decoder, ppm byte-histogram feature; cv2 drop-in)",
+    doc="multimodal op: decode + feature-extract plumbing over binary payloads (deterministic fake decoder, ppm byte-histogram feature)",
 )
 def mm_decode_features_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_scan(
@@ -209,28 +170,18 @@ def mm_resize(pages_like: DataFrame, target: int = 960, payload_col: str = "payl
     """Resize plumbing: the DetResizeForTest analog for opaque media
     (`onnxocr/operators.py:89-159`): limit the longer side to ``target``,
     round to multiples of 32, emit the shape_list [src_h, src_w, ratio_h,
-    ratio_w]. Geometry comes from the (fake or real) decoder; the pixel
-    resample itself is the cv2-gated step."""
+    ratio_w]. Geometry comes from the fake decoder; the pixel
+    resample itself is the codec step the fake decoder stands in for."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "src_w", "src_h", "dst_w", "dst_h", "ratio_w", "ratio_h")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                data = bytes(payload) if payload is not None else b""
-                h, w, _c, _f = _decode_image_fake(data)
-                ratio = min(1.0, float(target) / max(h, w, 1))
-                dst_w = max(32, int(round(w * ratio / 32)) * 32)
-                dst_h = max(32, int(round(h * ratio / 32)) * 32)
-                rows["doc_id"].append(int(doc_id))
-                rows["src_w"].append(w)
-                rows["src_h"].append(h)
-                rows["dst_w"].append(dst_w)
-                rows["dst_h"].append(dst_h)
-                rows["ratio_w"].append(round(dst_w / max(w, 1), 6))
-                rows["ratio_h"].append(round(dst_h / max(h, 1), 6))
-            yield pd.DataFrame(rows)
+    def resize_row(payload):
+        h, w, _c, _f = _decode_image_fake(bytes(payload) if payload is not None else b"")
+        ratio = min(1.0, float(target) / max(h, w, 1))
+        dst_w = max(32, int(round(w * ratio / 32)) * 32)
+        dst_h = max(32, int(round(h * ratio / 32)) * 32)
+        return [(w, h, dst_w, dst_h, round(dst_w / max(w, 1), 6), round(dst_h / max(h, 1), 6))]
 
-    return pages_like.mapInPandas(gen, schema=MM_RESIZE_SCHEMA)
+    return map_rows(pages_like, [payload_col], lambda: resize_row,
+                    MM_RESIZE_SCHEMA, carry=["doc_id"])
 
 
 @register(

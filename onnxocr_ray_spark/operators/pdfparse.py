@@ -32,22 +32,23 @@ streams, byte-exact xref table, trailer), with:
 - PDF literal-string escaping for ``\\ ( ) \\r \\n \\t``; non-ASCII
   text rides as raw UTF-8 bytes (valid in PDF literal strings).
 
-Scale design (100 TB): both synthesis and parse are per-row Arrow-batched
-``mapInPandas`` — zero shuffles, trivially partition-parallel; a giant
-PDF is a long row, which the extraction pipeline's existing size-probe
-routing (operators/extract.py) already handles. The parser never
-materializes more than one document's spans at a time.
+Scale design (100 TB): both synthesis and parse are per-row kernels
+behind ``rowmap.map_rows`` (one ``mapInArrow`` each) — zero shuffles,
+trivially partition-parallel; a giant PDF is a long row, which the
+extraction pipeline's existing size-probe routing
+(operators/extract.py) already handles. The parser never materializes
+more than one document's spans at a time.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onnxocr_ray_spark.registry import register
+from onnxocr_ray_spark.rowmap import map_rows
 from onnxocr_ray_spark.sources.tables import load_table, spread_scan
 
 LINE_CHARS = 48       # chars per synthesized text line (one span each)
@@ -148,17 +149,13 @@ def synth_pdf_bytes(doc_id: int, text: str) -> bytes:
 
 
 def synth_pdf(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) -> (doc_id, pdf:binary) via Arrow-batched mapInPandas."""
+    """(doc_id, text) -> (doc_id, pdf:binary), one PDF per row."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf_batch["doc_id"].astype("int64"),
-                "pdf": [synth_pdf_bytes(int(i), t if isinstance(t, str) else "")
-                        for i, t in zip(pdf_batch["doc_id"], pdf_batch["text"])],
-            })
+    def pdf_row(doc_id, text):
+        return [(synth_pdf_bytes(doc_id, text if isinstance(text, str) else ""),)]
 
-    return docs.mapInPandas(gen, schema="doc_id long, pdf binary")
+    return map_rows(docs, ["doc_id", "text"], lambda: pdf_row,
+                    "doc_id long, pdf binary", carry=["doc_id"])
 
 
 # ---------------------------------------------------------------------------
@@ -327,15 +324,14 @@ PDF_TEXT_SCHEMA = ("doc_id long, pdf_text string, n_spans long, "
                    "n_pages long, parse_ok boolean")
 
 
-def _safe_parse(payload) -> Tuple[Optional[str], int, int, bool]:
-    """(pdf_text, n_spans, n_pages, parse_ok) — the shared per-payload
-    row contract of pdf_extract and read_pdf_dir; malformed payloads
-    yield a failure row instead of failing the task."""
+def _parse_row(payload) -> List[Tuple[Optional[str], int, int, bool]]:
+    """[(pdf_text, n_spans, n_pages, parse_ok)] — the shared per-payload
+    row of pdf_extract and read_pdf_dir; a malformed payload yields a
+    failure row instead of failing the task."""
     try:
-        text, n_spans, n_pages = parse_pdf_bytes(bytes(payload))
-        return text, n_spans, n_pages, True
+        return [(*parse_pdf_bytes(bytes(payload)), True)]
     except Exception:
-        return None, 0, 0, False
+        return [(None, 0, 0, False)]
 
 
 def pdf_extract(pdfs: DataFrame, pdf_col: str = "pdf") -> DataFrame:
@@ -344,21 +340,8 @@ def pdf_extract(pdfs: DataFrame, pdf_col: str = "pdf") -> DataFrame:
     Malformed payloads yield parse_ok=false with null text instead of
     failing the task (a 10^12-doc crawl always contains broken files).
     """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            out = {"doc_id": [], "pdf_text": [], "n_spans": [],
-                   "n_pages": [], "parse_ok": []}
-            for doc_id, payload in zip(pdf_batch["doc_id"], pdf_batch[pdf_col]):
-                text, n_spans, n_pages, ok = _safe_parse(payload)
-                out["doc_id"].append(int(doc_id))
-                out["pdf_text"].append(text)
-                out["n_spans"].append(n_spans)
-                out["n_pages"].append(n_pages)
-                out["parse_ok"].append(ok)
-            yield pd.DataFrame(out)
-
-    return pdfs.mapInPandas(gen, schema=PDF_TEXT_SCHEMA)
+    return map_rows(pdfs, [pdf_col], lambda: _parse_row, PDF_TEXT_SCHEMA,
+                    carry=["doc_id"])
 
 
 # ---------------------------------------------------------------------------
@@ -414,23 +397,9 @@ def read_pdf_dir(spark: SparkSession, path: str, glob: str = "*.pdf") -> DataFra
             F.col("content").alias("pdf"),
         )
     )
-
-    def gen(batches):
-        for b in batches:
-            out = {"url": [], "warc_ts": [], "pdf_text": [], "n_spans": [],
-                   "n_pages": [], "parse_ok": []}
-            for url, ts, payload in zip(b["url"], b["warc_ts"], b["pdf"]):
-                text, n_spans, n_pages, ok = _safe_parse(payload)
-                out["url"].append(url)
-                out["warc_ts"].append(ts)
-                out["pdf_text"].append(text)
-                out["n_spans"].append(n_spans)
-                out["n_pages"].append(n_pages)
-                out["parse_ok"].append(ok)
-            yield pd.DataFrame(out)
-
-    return raw.mapInPandas(
-        gen,
-        schema=("url string, warc_ts timestamp, pdf_text string, "
-                "n_spans long, n_pages long, parse_ok boolean"),
+    return map_rows(
+        raw, ["pdf"], lambda: _parse_row,
+        ("url string, warc_ts timestamp, pdf_text string, "
+         "n_spans long, n_pages long, parse_ok boolean"),
+        carry=["url", "warc_ts"],
     )

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from onnxocr_ray_spark.functions import count_occurrences, portable_md5
 from onnxocr_ray_spark.registry import register
+from onnxocr_ray_spark.rowmap import map_rows
 from onnxocr_ray_spark.sources.tables import load_table, spread_scan
 
 # marker words per language for the n-gram heuristic (padded with spaces so
@@ -575,37 +576,25 @@ def lm_fluency_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partial counts), two hash joins back onto the occurrence
     stream keyed by bigram/w1, one final per-doc sum. Every exchanged
     key is a token string, never a document."""
-    import pandas as pd
-
     docs = spread_scan(load_table(spark, sf_dir, "documents")).select("doc_id", "text")
 
-    # r6: the bigram stream is generated in an Arrow-batched Python
-    # kernel (bit-identical mirror of filter(split(lower(text), ' '),
-    # w != '') + concat_ws over 2-slices + split_part — the same
-    # portability contract as dedup._py_shingles, fuzz-pinned against
-    # the oracle's string_split in test_properties) instead of
-    # Catalyst's interpreted slice/concat lambda transforms, and
-    # persisted once for its THREE consumers (bigram counts, first-word
-    # counts, the scoring join) — scope-managed, released before the
-    # next registry query.
+    # r6: the bigram stream is generated in a per-row Python kernel
+    # (bit-identical mirror of filter(split(lower(text), ' '), w != '')
+    # + concat_ws over 2-slices + split_part — the same portability
+    # contract as dedup._py_shingles, fuzz-pinned against the oracle's
+    # string_split in test_properties) instead of Catalyst's interpreted
+    # slice/concat lambda transforms, and persisted once for its THREE
+    # consumers (bigram counts, first-word counts, the scoring join) —
+    # scope-managed, released before the next registry query.
     from onnxocr_ray_spark.caching import scoped_persist
 
-    def gen(batches):
-        for pdf in batches:
-            ids_out, bg_out, w1_out = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                words = [w for w in (text or "").lower().split(" ") if w]
-                did = int(doc_id)
-                for i in range(len(words) - 1):
-                    ids_out.append(did)
-                    bg_out.append(words[i] + " " + words[i + 1])
-                    w1_out.append(words[i])
-            yield pd.DataFrame(
-                {"doc_id": ids_out, "bigram": bg_out, "w1": w1_out}
-            )
+    def bigram_row(text):
+        words = [w for w in (text or "").lower().split(" ") if w]
+        return [(words[i] + " " + words[i + 1], words[i]) for i in range(len(words) - 1)]
 
     bg = scoped_persist(
-        docs.mapInPandas(gen, schema="doc_id long, bigram string, w1 string")
+        map_rows(docs, ["text"], lambda: bigram_row,
+                 "doc_id long, bigram string, w1 string", carry=["doc_id"])
     )
     c2 = bg.groupBy("bigram").agg(F.count("*").alias("n2"))
     c1 = bg.groupBy("w1").agg(F.count("*").alias("n1"))

@@ -40,7 +40,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         # default 128 MB packs small parquet files into too few scan
         # partitions for the Python-stage pipelines (a scan must yield at
-        # least ~cores partitions or mapInPandas can't use the cluster);
+        # least ~cores partitions or a Python map can't use the cluster);
         # 16 MB keeps scans parallel without tiny-task overhead
         .config("spark.sql.files.maxPartitionBytes", str(16 << 20))
         .config("spark.ui.enabled", "false")

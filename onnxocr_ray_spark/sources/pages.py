@@ -3,8 +3,9 @@
 Builds the input table of BASELINE.json's ``input_hint`` —
 ``(url string, warc_ts timestamp, html binary, text string, lang string)``
 — from the driver-generated ``documents`` table, entirely inside Spark
-(Arrow-batched pandas UDF; no driver-side materialization), deterministic
-per ``doc_id`` and therefore independent of partitioning.
+(a per-row kernel behind ``rowmap.map_rows``; no driver-side
+materialization), deterministic per ``doc_id`` and therefore
+independent of partitioning.
 
 The synthesized HTML wraps each document's text in realistic boilerplate
 (nav/ads/footer, script/style noise) and plants the edge rows FIXTURES.md
@@ -21,11 +22,11 @@ import random
 import textwrap
 from datetime import datetime, timedelta, timezone
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from onnxocr_ray_spark.rowmap import map_rows
 from onnxocr_ray_spark.sources.tables import load_table
 
 SEED = 42
@@ -161,9 +162,9 @@ PAGES_SCHEMA = T.StructType(
 def pages_from_documents(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFrame:
     """documents parquet -> pages DataFrame, synthesized executor-side.
 
-    Uses ``mapInPandas`` so the (potentially large) html payloads are
-    produced inside executors, Arrow batch by Arrow batch — the driver
-    never holds the table. Deterministic per (doc_id, copy).
+    Uses ``rowmap.map_rows`` so the (potentially large) html payloads
+    are produced inside executors, Arrow batch by Arrow batch — the
+    driver never holds the table. Deterministic per (doc_id, copy).
 
     ``copies > 1`` fans each document out into ``copies`` distinct
     deterministic page variants (different synthetic doc ids, hence
@@ -185,30 +186,15 @@ def pages_from_docs_df(docs: DataFrame, copies: int = 1) -> DataFrame:
     if docs.rdd.getNumPartitions() < target:
         docs = docs.repartition(target, "doc_id")
 
-    def gen(batches):
-        for pdf in batches:
-            for c in range(copies):
-                ids = [int(d) + c * 10_000_019 for d in pdf.doc_id]
-                htmls = [
-                    synth_page(i, t if isinstance(t, str) else "", l)
-                    for i, t, l in zip(ids, pdf.text, pdf.lang)
-                ]
-                yield pd.DataFrame(
-                    {
-                        "url": [
-                            page_url(i, l) for i, l in zip(ids, pdf.lang)
-                        ],
-                        "warc_ts": [
-                            page_ts(i).replace(tzinfo=None) for i in ids
-                        ],
-                        "html": htmls,
-                        "text": pdf.text,
-                        "lang": pdf.lang,
-                        "html_size": [len(h) for h in htmls],
-                    }
-                )
+    def page_rows(doc_id, text, lang):
+        text = text if isinstance(text, str) else ""
+        for c in range(copies):
+            i = doc_id + c * 10_000_019
+            html = synth_page(i, text, lang)
+            yield page_url(i, lang), page_ts(i), html, len(html)
 
-    return docs.mapInPandas(gen, schema=PAGES_SCHEMA)
+    return map_rows(docs, ["doc_id", "text", "lang"], lambda: page_rows,
+                    PAGES_SCHEMA, carry=["text", "lang"])
 
 
 def pages_table(

@@ -92,7 +92,7 @@ def spread_scan(df: DataFrame) -> DataFrame:
     CPU-heavy Python stage.
 
     The driver-generated tables are single small parquet files, so the
-    scan yields one input split and any mapInPandas chained on it runs on
+    scan yields one input split and any Python map chained on it runs on
     ONE core (measured: the MinHash signature pass was 2.8 s serial vs
     ~0.3 s spread at sf0.1). A real 100 TB table has thousands of splits
     and this is a no-op — the repartition only fires when the scan would

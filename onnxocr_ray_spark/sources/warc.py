@@ -27,11 +27,11 @@ This module makes that format a first-class source:
   (/root/reference/onnxocr/app-service.py accepts wire payloads per
   request; a crawl delivers the same payloads batched in WARC).
 
-Scale design (100 TB): synthesis and parse are chained shuffle-free
-``mapInPandas`` — one task per split, no Exchange (plan-asserted in
-tests). A real CC segment (~1 GB .warc.gz) is one binaryFile row;
-records stream out of the member walk one at a time, so peak memory is
-one record, not one file.
+Scale design (100 TB): synthesis (one ``mapInPandas``, a blob per
+batch) and parse (one per-row kernel behind ``rowmap.map_rows``) chain
+shuffle-free — one task per split, no Exchange (plan-asserted in
+tests). A real CC segment (~1 GB .warc.gz) is one binaryFile row whose
+records all come out of one ``parse_warc_blob`` walk.
 """
 
 from __future__ import annotations
@@ -39,11 +39,14 @@ from __future__ import annotations
 import gzip
 import hashlib
 import zlib
-from typing import Iterator, List, Tuple
+from datetime import datetime
+from typing import Callable, Iterator, List, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from onnxocr_ray_spark.rowmap import map_rows
 
 URI_PREFIX = "https://crawl.example/doc/"
 _EPOCH_DAY = "2024-01-01"  # WARC-Date base: epoch + doc_id seconds
@@ -197,36 +200,48 @@ WARC_ROWS_SCHEMA = (
 )
 
 
+def _record_walk(row_of: Callable[[dict], Optional[tuple]]):
+    """Per-blob row function: ``row_of`` of each record ``parse_warc_blob``
+    walks, None dropping a record. A blob that fails to parse gives no
+    rows (crawls contain truncated files; the job must not die)."""
+
+    def f(blob):
+        try:
+            recs = parse_warc_blob(blob)
+        except Exception:
+            return ()
+        return [row for row in map(row_of, recs) if row is not None]
+
+    return f
+
+
+def _record_row(r: dict) -> tuple:
+    uri = r["uri"] or ""
+    try:
+        doc_id = int(uri.rsplit("/", 1)[1])
+    except (IndexError, ValueError):
+        doc_id = -1
+    return (doc_id, uri, r["warc_date"], r["http_status"],
+            r["payload"].decode("utf-8", "replace"), len(r["payload"]))
+
+
+def _page_row(r: dict) -> Optional[tuple]:
+    if r["warc_type"] != "response":
+        return None
+    try:  # a malformed WARC-Date must not fail the task
+        ts = (datetime.fromisoformat(r["warc_date"].rstrip("Z"))
+              if r["warc_date"] else None)
+    except ValueError:
+        ts = None
+    return (r["uri"], ts, r["payload"])
+
+
 def warc_records(warcs: DataFrame, warc_col: str = "warc") -> DataFrame:
     """(warc binary) -> one row per parsed record. A blob that fails to
     parse contributes its successfully-walked prefix (crawls contain
     truncated files; the job must not die)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {k: [] for k in (
-                "doc_id", "uri", "warc_date", "http_status", "payload",
-                "payload_len")}
-            for blob in b[warc_col]:
-                try:
-                    recs = parse_warc_blob(blob)
-                except Exception:
-                    continue
-                for r in recs:
-                    uri = r["uri"] or ""
-                    try:
-                        doc_id = int(uri.rsplit("/", 1)[1])
-                    except (IndexError, ValueError):
-                        doc_id = -1
-                    rows["doc_id"].append(doc_id)
-                    rows["uri"].append(uri)
-                    rows["warc_date"].append(r["warc_date"])
-                    rows["http_status"].append(r["http_status"])
-                    rows["payload_len"].append(len(r["payload"]))
-                    rows["payload"].append(r["payload"].decode("utf-8", "replace"))
-            yield pd.DataFrame(rows)
-
-    return warcs.mapInPandas(gen, schema=WARC_ROWS_SCHEMA)
+    return map_rows(warcs, [warc_col], lambda: _record_walk(_record_row),
+                    WARC_ROWS_SCHEMA)
 
 
 def read_warc(spark: SparkSession, path: str, glob: str = "*.warc.gz") -> DataFrame:
@@ -239,30 +254,9 @@ def read_warc(spark: SparkSession, path: str, glob: str = "*.warc.gz") -> DataFr
         .load(path)
         .select("content")
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {"url": [], "warc_ts": [], "html": []}
-            for blob in b["content"]:
-                try:
-                    recs = parse_warc_blob(blob)
-                except Exception:
-                    continue
-                for r in recs:
-                    if r["warc_type"] != "response":
-                        continue
-                    try:  # a malformed WARC-Date must not fail the task
-                        ts = (pd.Timestamp(r["warc_date"].rstrip("Z"))
-                              if r["warc_date"] else None)
-                    except ValueError:
-                        ts = None
-                    rows["url"].append(r["uri"])
-                    rows["warc_ts"].append(ts)
-                    rows["html"].append(r["payload"])
-            yield pd.DataFrame(rows)
-
     return (
-        raw.mapInPandas(gen, schema="url string, warc_ts timestamp, html binary")
+        map_rows(raw, ["content"], lambda: _record_walk(_page_row),
+                 "url string, warc_ts timestamp, html binary")
         .withColumn("text", F.lit(None).cast("string"))
         .withColumn("lang", F.lit(None).cast("string"))
     )

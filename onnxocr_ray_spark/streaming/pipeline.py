@@ -25,7 +25,27 @@ from pyspark.sql.streaming import StreamingQuery
 
 from onnxocr_ray_spark.config import DEFAULT_CONFIG, ExtractConfig
 from onnxocr_ray_spark.operators.extract import extract
+from onnxocr_ray_spark.rowmap import map_rows
 from onnxocr_ray_spark.sources.pages import PAGES_SCHEMA
+
+# the documents-stream schema every docs_dir reader defaults to
+DOCS_SCHEMA = "doc_id long, text string, lang string"
+# ... and every events_dir reader
+EVENTS_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string,"
+    " value double, props string"
+)
+
+
+def _read_stream(
+    spark: SparkSession, path: str, schema, max_files_per_trigger: Optional[int] = None
+) -> DataFrame:
+    """Parquet files arriving under ``path`` as a stream of ``schema``
+    rows; ``max_files_per_trigger`` bounds each micro-batch's file intake."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(path)
 
 
 def extract_stream(
@@ -41,11 +61,7 @@ def extract_stream(
     foreachBatch keeps the full batch operator graph (fused fast path,
     straggler routing) — each micro-batch is just a bounded pages table.
     """
-    stream = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(pages_dir)
-    )
+    stream = _read_stream(spark, pages_dir, PAGES_SCHEMA, max_files_per_trigger)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         out = extract(batch_df, cfg).withColumn("epoch_id", F.lit(epoch_id))
@@ -92,10 +108,6 @@ def sessionize_stream(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    schema = schema or (
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string"
-    )
     out_schema = (
         "user_id long, session_start timestamp, session_end timestamp,"
         " n_events long, total_value double"
@@ -143,7 +155,7 @@ def sessionize_stream(
                 }
             )
 
-    stream = spark.readStream.schema(schema).parquet(events_dir)
+    stream = _read_stream(spark, events_dir, schema or EVENTS_SCHEMA)
     return (
         stream.groupBy("user_id")
         .applyInPandasWithState(
@@ -173,11 +185,7 @@ def windowed_events_stream(
     memory sink + ``processAllAvailable`` this is deterministic on a
     bounded directory, matching the batch ``window_hourly`` oracle.
     """
-    schema = schema or (
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string"
-    )
-    stream = spark.readStream.schema(schema).parquet(events_dir)
+    stream = _read_stream(spark, events_dir, schema or EVENTS_SCHEMA)
     return (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("w"), "event_type")
@@ -221,7 +229,6 @@ def dedup_stream(
     """
     import pandas as pd
 
-    schema = schema or "doc_id long, text string, lang string"
     out_schema = (
         "content_hash string, canonical_id long, lang string, is_new boolean"
     )
@@ -246,10 +253,7 @@ def dedup_stream(
             }
         )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_dir)
+    stream = _read_stream(spark, docs_dir, schema or DOCS_SCHEMA, max_files_per_trigger)
     hashed = stream.select(
         F.md5(F.col("text").cast("binary")).alias("content_hash"),
         "doc_id",
@@ -264,26 +268,6 @@ def dedup_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def _popcount64(x):
-    """Vectorized SWAR popcount over a uint64 ndarray (numpy<2 has no
-    bitwise_count)."""
-    import numpy as np
-
-    x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
-    x = (x & np.uint64(0x3333333333333333)) + (
-        (x >> np.uint64(2)) & np.uint64(0x3333333333333333)
-    )
-    x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-    return (x * np.uint64(0x0101010101010101)) >> np.uint64(56)
-
-
-def simhash_int64(sig: str) -> int:
-    """64-char '0'/'1' SimHash string -> signed int64 carrying the same
-    bit pattern (char 0 = most significant bit)."""
-    v = int(sig, 2)
-    return v - (1 << 64) if v >= (1 << 63) else v
 
 
 def neardup_stream(
@@ -335,10 +319,11 @@ def neardup_stream(
     from onnxocr_ray_spark.operators.dedup import (
         SIMHASH_HAMMING_K,
         SIMHASH_N_BANDS,
+        _popcount64,
+        simhash_int64,
         simhash_of,
     )
 
-    schema = schema or "doc_id long, text string, lang string"
     band_w = 64 // SIMHASH_N_BANDS
     out_schema = (
         "doc_id long, band_idx int, canonical_id long, hamming int"
@@ -390,23 +375,12 @@ def neardup_stream(
                 }
             )
 
-    def sign(batches):
+    def kernel():
         memo: dict = {}
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "sig": [simhash_int64(simhash_of(t, memo)) for t in pdf["text"]],
-                }
-            )
+        return lambda text: [(simhash_int64(simhash_of(text, memo)),)]
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_dir)
-    signed = stream.select("doc_id", "text").mapInPandas(
-        sign, schema="doc_id long, sig long"
-    )
+    stream = _read_stream(spark, docs_dir, schema or DOCS_SCHEMA, max_files_per_trigger)
+    signed = map_rows(stream, ["text"], kernel, "doc_id long, sig long", carry=["doc_id"])
     # band b covers signature chars [16b, 16b+16) = bits 63-16b..48-16b
     # of the int64 — an unsigned shift + mask, JVM-side
     bands = signed.select(
@@ -468,11 +442,7 @@ def decontaminate_stream(
     side is broadcast once per micro-batch, the stream side never
     shuffles — no exchange at all in the continuous plan.
     """
-    schema = schema or "doc_id long, text string, lang string"
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_dir)
+    stream = _read_stream(spark, docs_dir, schema or DOCS_SCHEMA, max_files_per_trigger)
 
     from onnxocr_ray_spark.operators.dedup import decon_doc_grams
 
@@ -507,11 +477,9 @@ def cdc_stream(
     """
     from onnxocr_ray_spark.functions import portable_md5
 
-    schema = schema or "doc_id long, text string"
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_dir).select(
+    stream = _read_stream(
+        spark, docs_dir, schema or "doc_id long, text string", max_files_per_trigger
+    ).select(
         "doc_id", portable_md5(F.col("text")).alias("fp_new")
     )
     # presence flag, not fp IS NULL: a NULL-text baseline row must read

@@ -90,7 +90,7 @@ def test_spark_synth_parse_roundtrip(spark):
 
 
 def test_plan_is_shuffle_free(spark):
-    """Synthesis+parse is two chained mapInPandas over the scan — at 100 TB
+    """Synthesis+parse is two chained per-row maps over the scan — at 100 TB
     the job must stay embarrassingly parallel: no Exchange in the plan."""
     docs = spark.createDataFrame([(1, "x")], "doc_id long, text string")
     plan = pdf_extract(synth_pdf(docs))._jdf.queryExecution().executedPlan().toString()

@@ -167,7 +167,7 @@ def test_sized_straggler_branches_filter_on_size(spark, queries):
 def test_synthesized_ingest_takes_sized_zero_cache_plan(spark, queries):
     # the production ingest (pages_from_documents) materializes html_size,
     # so extract() must take the sized strategy — zero cache — even on the
-    # non-materialized mapInPandas source
+    # non-materialized per-row map source
     from onnxocr_ray_spark.sources.pages import pages_from_documents
 
     df = extract(pages_from_documents(spark, SF0001))
@@ -206,6 +206,23 @@ def test_straggler_leg_runs_detect_once(spark, queries):
     plan = plan_of(extract(pages_table(spark, SF0001), straggler_html_bytes=0))
     assert plan.count("MapInArrow") == 2, plan  # the fused small leg + detect
     assert "MapInPandas" not in plan, plan
+
+
+def test_per_row_kernels_cross_through_one_arrow_map(spark, queries):
+    # every per-row Python kernel runs behind rowmap.map_rows (a
+    # MapInArrow); the WARC roundtrip keeps exactly one MapInPandas, the
+    # blob-per-batch synth_warc
+    from onnxocr_ray_spark.sources.pages import pages_from_documents
+
+    for name in ("dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash",
+                 "decontaminate", "lm_fluency_score", "mm_decode_features",
+                 "pdf_extract_text"):
+        plan = plan_of(queries[name].fn(spark, SF0001))
+        assert "MapInArrow" in plan and "MapInPandas" not in plan, (name, plan)
+    plan = plan_of(pages_from_documents(spark, SF0001))
+    assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
+    plan = plan_of(queries["warc_ingest_roundtrip"].fn(spark, SF0001))
+    assert plan.count("MapInPandas") == 1 and "MapInArrow" in plan, plan
 
 
 def test_probe_does_not_run_the_spread_shuffle(spark, queries, monkeypatch, tmp_path):
@@ -439,7 +456,7 @@ def test_dup_gram_fraction_partial_aggregates_minmax(spark, queries):
     assert plan.count("Exchange hashpartitioning") == 2, plan
     # r6: gram hashing moved into the arrow kernel (decon_doc_grams);
     # every exchanged key is still the fixed-width 16-hex gram_h it emits
-    assert "MapInPandas" in plan or "substring(md5(" in plan
+    assert "MapInArrow" in plan, plan
     assert "hashpartitioning(gram_h" in plan, plan
 
 

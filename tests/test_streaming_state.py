@@ -414,8 +414,7 @@ def test_simhash_int64_roundtrip_and_popcount():
     strings)."""
     import numpy as np
 
-    from onnxocr_ray_spark.operators.dedup import simhash_of
-    from onnxocr_ray_spark.streaming.pipeline import _popcount64, simhash_int64
+    from onnxocr_ray_spark.operators.dedup import _popcount64, simhash_int64, simhash_of
 
     texts = ["alpha beta gamma", "alpha beta gamma delta", "", "zz zz zz",
              "unique words only here", "ünïcode 漢字 test"]
@@ -448,8 +447,12 @@ def test_neardup_stream_skewed_bucket_bounded(spark, tmpdir):
 
     import duckdb
 
-    from onnxocr_ray_spark.operators.dedup import SIMHASH_HAMMING_K, simhash_of
-    from onnxocr_ray_spark.streaming.pipeline import neardup_stream, simhash_int64
+    from onnxocr_ray_spark.operators.dedup import (
+        SIMHASH_HAMMING_K,
+        simhash_int64,
+        simhash_of,
+    )
+    from onnxocr_ray_spark.streaming.pipeline import neardup_stream
 
     template = (
         "subscribe to our newsletter for weekly updates about products "

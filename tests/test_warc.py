@@ -69,7 +69,7 @@ def test_spark_roundtrip_and_shuffle_free_plan(spark):
     )
     recs = warc_records(synth_warc(docs))
     plan = recs._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan  # chained mapInPandas over the scan
+    assert "Exchange" not in plan  # synth_warc + the record walk, chained over the scan
     got = {r["doc_id"]: r for r in recs.collect()}
     for i, t in enumerate(ADVERSARIAL):
         assert got[i]["payload"] == t
