@@ -35,7 +35,8 @@ def map_rows(
     tuples: a row gives 0, 1 or n output rows. ``schema`` is the output
     schema. Its ``carry`` fields are the input row's own values,
     repeated onto each output row with one Arrow ``take`` per batch; its
-    other fields, in schema order, are the values of ``f``'s tuples.
+    other fields, in schema order, are the values of ``f``'s tuples
+    (a naive datetime among them is taken as UTC).
     """
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)

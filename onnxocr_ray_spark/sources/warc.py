@@ -39,7 +39,6 @@ from __future__ import annotations
 import gzip
 import hashlib
 import zlib
-from datetime import datetime
 from typing import Callable, Iterator, List, Optional, Tuple
 
 import pandas as pd
@@ -229,7 +228,7 @@ def _page_row(r: dict) -> Optional[tuple]:
     if r["warc_type"] != "response":
         return None
     try:  # a malformed WARC-Date must not fail the task
-        ts = (datetime.fromisoformat(r["warc_date"].rstrip("Z"))
+        ts = (pd.Timestamp(r["warc_date"].rstrip("Z"))
               if r["warc_date"] else None)
     except ValueError:
         ts = None

@@ -1,10 +1,11 @@
 """rowmap.map_rows: the one Arrow crossing of the per-row Python kernels."""
 
 import datetime
+import os
 import shutil
+import subprocess
 import sys
 import tempfile
-import types
 
 import pyarrow as pa
 import pytest
@@ -98,21 +99,27 @@ def test_streaming_input(spark):
     assert got == want
 
 
-def test_mm_decode_reports_fake_decoder_even_with_cv2_importable(monkeypatch):
+def test_mm_decode_reports_fake_decoder_even_with_cv2_importable(spark):
     """The decode kernel always runs the fake decoder, so it must say so
-    whatever codec modules happen to import."""
-    import importlib
+    whatever codec modules happen to import: a fresh import of the module
+    (its own interpreter, so this session's query registry is untouched)
+    with a stub ``cv2`` importable still labels its rows ``fake``."""
+    probe = (
+        "import sys, types\n"
+        "sys.modules['cv2'] = types.ModuleType('cv2')\n"
+        "from onnxocr_ray_spark.operators import multimodal as mm\n"
+        "payload = bytes(range(256)) * 3\n"
+        "[row] = mm._feature_row(payload)\n"
+        "h, w, c, feat = mm._decode_image_fake(payload)\n"
+        "assert row == (len(payload), w, h, c, feat, 'fake'), row\n"
+        "assert mm._feature_row(None)[0][-1] == 'fake'\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", probe], cwd=root, check=True)
 
-    from onnxocr_ray_spark.operators import multimodal
+    from onnxocr_ray_spark.operators.multimodal import mm_decode_features
 
-    monkeypatch.setitem(sys.modules, "cv2", types.ModuleType("cv2"))
-    try:
-        mm = importlib.reload(multimodal)
-        payload = bytes(range(256)) * 3
-        [row] = mm._feature_row(payload)
-        h, w, c, feat = mm._decode_image_fake(payload)
-        assert row == (len(payload), w, h, c, feat, "fake")
-        assert mm._feature_row(None)[0][-1] == "fake"
-    finally:
-        monkeypatch.delitem(sys.modules, "cv2")
-        importlib.reload(multimodal)
+    payloads = spark.createDataFrame(
+        [(1, bytearray(b"\x00\xff" * 40)), (2, None)], "doc_id long, payload binary")
+    got = {r.doc_id: r.decoder for r in mm_decode_features(payloads).collect()}
+    assert got == {1: "fake", 2: "fake"}
