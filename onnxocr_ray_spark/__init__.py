@@ -22,3 +22,9 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+# unpickling any kernel imports this module, so each executor worker
+# installs the check before its second task
+from onnxocr_ray_spark.packaging import install_zip_stamp_check
+
+install_zip_stamp_check()

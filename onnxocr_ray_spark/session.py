@@ -46,6 +46,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.python.worker.reuse", "true")
+        # workers start in the driver's cwd; without this they import a
+        # package found there ahead of the shipped zip
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
